@@ -27,12 +27,12 @@ from pyspark.sql import functions as F
 
 from saas_analytics_pipeline_spark.operators.dedup import (
     N_PERM,
+    SHINGLE_W,
     SHINGLES_SQL,
     _mins_sql,
     minhash_signatures,
-    shingles_arr,
 )
-from saas_analytics_pipeline_spark.functions import hash60_sql
+from saas_analytics_pipeline_spark.functions import hash60_sql, window_hashes
 from saas_analytics_pipeline_spark.qcatalog import query
 from saas_analytics_pipeline_spark.sources import load_table
 
@@ -276,9 +276,7 @@ def q_minhash_pr(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = docs.select("doc_id", F.split("text", " ").alias("_toks")).select(
         "doc_id",
         F.explode(
-            F.array_distinct(
-                F.transform(shingles_arr(F.col("_toks")), lambda _s: F.xxhash64(_s))
-            )
+            F.array_distinct(window_hashes(F.col("_toks"), SHINGLE_W))
         ).alias("shingle"),
     )
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))

@@ -33,7 +33,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from saas_analytics_pipeline_spark.functions import EMAIL_RE, hash60, hash60_sql
+from saas_analytics_pipeline_spark.functions import (
+    EMAIL_RE,
+    hash60,
+    hash60_sql,
+    window_hashes,
+)
 from saas_analytics_pipeline_spark.qcatalog import query
 from saas_analytics_pipeline_spark.sources import load_table, spread_for_fanout
 
@@ -53,23 +58,13 @@ def word_ngrams(col: str = "text", w: int = NGRAM_W) -> F.Column:
     """Sliding word n-grams as an array column (JVM-side; no Python).
     Docs shorter than w words yield one n-gram: the whole doc.
 
-    Prefer :func:`word_ngrams_arr` over a pre-split tokens column in
-    query paths — Catalyst does not hoist the split out of the lambda,
-    so this form re-splits the text once per n-gram position (r13)."""
+    Query paths that only compare n-grams hash them instead, with
+    functions.window_hashes over a pre-split tokens column — no n-gram
+    string is built, and the split is not re-evaluated per position."""
     words = F.split(F.col(col), " ")
     return F.transform(
         F.sequence(F.lit(1), F.greatest(F.size(words) - F.lit(w - 1), F.lit(1))),
         lambda i: F.array_join(F.slice(words, i, w), " "),
-    )
-
-
-def word_ngrams_arr(toks: F.Column, w: int = NGRAM_W) -> F.Column:
-    """word_ngrams over a PRE-SPLIT tokens array column (a bound
-    attribute reference, evaluated once per row — guide §1.2; measured
-    2.7x on the n-gram generate stage at sf0.1)."""
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size(toks) - F.lit(w - 1), F.lit(1))),
-        lambda i: F.array_join(F.slice(toks, i, w), " "),
     )
 
 
@@ -138,12 +133,7 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(
             "doc_id",
             F.explode(
-                F.array_distinct(
-                    F.transform(
-                        word_ngrams_arr(F.col("_toks")),
-                        lambda _s: F.xxhash64(_s),
-                    )
-                )
+                F.array_distinct(window_hashes(F.col("_toks"), NGRAM_W))
             ).alias("h"),
         )
 
@@ -622,11 +612,7 @@ def q_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # subplan is consumed twice (df + join-back), doubling the saving.
     g = docs.select("doc_id", F.split("text", " ").alias("_toks")).select(
         "doc_id",
-        F.explode(
-            F.transform(
-                word_ngrams_arr(F.col("_toks"), w=BOILER_W), lambda _s: F.xxhash64(_s)
-            )
-        ).alias("g"),
+        F.explode(window_hashes(F.col("_toks"), BOILER_W)).alias("g"),
     ).distinct()
     n = docs.agg(F.count("*").alias("n_docs"))
     df = g.groupBy("g").agg(F.count("*").alias("df"))
@@ -928,9 +914,7 @@ def q_dup_span_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         F.explode(
-            F.array_distinct(
-                F.transform(word_ngrams_arr(F.col("_toks")), lambda _s: F.xxhash64(_s))
-            )
+            F.array_distinct(window_hashes(F.col("_toks"), NGRAM_W))
         ).alias("sh"),
     )
     # document frequency via a window over the shingle key instead of a
@@ -1168,10 +1152,8 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = (
         docs.select("source", F.split("text", " ").alias("_toks"))
         .select(
-            "source",
-            F.explode(word_ngrams_arr(F.col("_toks"), w=5)).alias("gram"),
+            "source", F.explode(window_hashes(F.col("_toks"), 5)).alias("g")
         )
-        .select("source", F.xxhash64("gram").alias("g"))
         .distinct()
     )
     # count-over-window instead of a spread-table self-join: the corpus is

@@ -40,7 +40,7 @@ from saas_analytics_pipeline_spark.operators.text import (
     _score_sql,
 )
 from saas_analytics_pipeline_spark.qcatalog import query
-from saas_analytics_pipeline_spark.sources import load_table
+from saas_analytics_pipeline_spark.sources import load_table, spread_for_fanout
 
 # --------------------------------------------------------------------------
 # deterministic URL synthesis (stand-in for a crawl lake's url column)
@@ -853,15 +853,20 @@ def q_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is exactly what the containment check certifies).
 
     Scale: synthesis and extraction are regexp_replace/replace chains in
-    whole-stage codegen — zero UDFs, text dies in the scan (plan-guarded
-    in test_plans.py); only |sources|-grain partial aggregates shuffle.
+    whole-stage codegen — zero UDFs; html and extracted text die in the
+    scan stage and only |sources|-grain partial aggregates key-shuffle
+    (plan-guarded in test_plans.py). The one Exchange that may carry the
+    raw text is the conditional volume-neutral spread in front of
+    synthesis (sources.spread_for_fanout — a no-op on multi-file lakes),
+    which lets the regex chain run on every core when the documents
+    arrive as a single unsplittable row group.
     At 100 TB this is the trafilatura/jusText position in the pipeline
     with the plumbing (schema, scan-locality, aggregate grain) real.
 
     Reference scope: no crawl surface in the reference (documents are
     synthetic, data_gen/generate_and_load_script.py) — north-star
     extension (BASELINE.json)."""
-    docs = load_table(spark, sf_dir, "documents")
+    docs = spread_for_fanout(load_table(spark, sf_dir, "documents"))
     raw = synth_html(docs)
     ext = raw.select(
         "doc_id",

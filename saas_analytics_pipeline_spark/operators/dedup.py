@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from saas_analytics_pipeline_spark.functions import hash60, hash60_sql
+from saas_analytics_pipeline_spark.functions import hash60, hash60_sql, window_hashes
 from saas_analytics_pipeline_spark.qcatalog import query
 from saas_analytics_pipeline_spark.sources import load_table, spread_for_fanout
 
@@ -327,7 +327,7 @@ def pairwise_jaccard(cand: DataFrame, docs: DataFrame) -> DataFrame:
     cand_docs = cand.select(F.col("a").alias("doc_id")).unionByName(
         cand.select(F.col("b").alias("doc_id"))
     )
-    # spread BEFORE the shingle projection: the O(tokens) slice+concat per
+    # spread BEFORE the shingle projection: the O(tokens) slice+hash per
     # shingle position is the expensive part, and a few parquet input
     # splits would otherwise serialize it on a handful of cores (the
     # scan-parallelism ceiling measured in docs/SCALE.md — 10x at sf3)
@@ -340,9 +340,7 @@ def pairwise_jaccard(cand: DataFrame, docs: DataFrame) -> DataFrame:
         docs.join(cand_docs, "doc_id", "left_semi")
     ).select("doc_id", F.split("text", " ").alias("_toks")).select(
         "doc_id",
-        F.array_distinct(
-            F.transform(shingles_arr(F.col("_toks")), lambda _s: F.xxhash64(_s))
-        ).alias("ss"),
+        F.array_distinct(window_hashes(F.col("_toks"), SHINGLE_W)).alias("ss"),
     )
     paired = (
         cand.join(sets.alias("sa"), F.col("a") == F.col("sa.doc_id"))
@@ -381,9 +379,7 @@ def near_dup_pairs(docs: DataFrame, jaccard_threshold: float = 0.7) -> DataFrame
     sh = docs.select("doc_id", F.split("text", " ").alias("_toks")).select(
         "doc_id",
         F.explode(
-            F.array_distinct(
-                F.transform(shingles_arr(F.col("_toks")), lambda _s: F.xxhash64(_s))
-            )
+            F.array_distinct(window_hashes(F.col("_toks"), SHINGLE_W))
         ).alias("s"),
     )
     return exact_jaccard(cand, sh).where(F.col("jaccard") >= jaccard_threshold)
@@ -422,9 +418,7 @@ def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = docs.select("doc_id", F.split("text", " ").alias("_toks")).select(
         "doc_id",
         F.explode(
-            F.array_distinct(
-                F.transform(shingles_arr(F.col("_toks")), lambda _s: F.xxhash64(_s))
-            )
+            F.array_distinct(window_hashes(F.col("_toks"), SHINGLE_W))
         ).alias("s"),
     ).distinct()
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
@@ -951,9 +945,7 @@ def q_sketch_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     dsh = docs.select("doc_id", F.split("text", " ").alias("_toks")).select(
         "doc_id",
         F.explode(
-            F.array_distinct(
-                F.transform(shingles_arr(F.col("_toks")), lambda _s: F.xxhash64(_s))
-            )
+            F.array_distinct(window_hashes(F.col("_toks"), SHINGLE_W))
         ).alias("s"),
     )
     sizes = dsh.groupBy("doc_id").agg(F.count("*").alias("n"))
@@ -1391,41 +1383,6 @@ def q_dedup_lsh_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 RUN_W = 8  # exact-overlap window width in tokens (the "50-token" knob)
 
 
-def token_windows(col: str = "text", w: int = RUN_W) -> F.Column:
-    """Every FULL-width ``w``-token window of the space-split token
-    stream as an array column (JVM-side, no UDF); docs shorter than the
-    window yield an empty array (no partial windows — exactness is the
-    point of this modality, unlike shingles()).
-
-    r13: the tokenization is NOT inlined here — callers must pass a
-    pre-split tokens array column (see token_windows_arr) or accept the
-    split being re-evaluated per window inside the lambda (Catalyst does
-    not hoist common subexpressions out of higher-order-function lambdas:
-    profiled 2.7x slower at sf0.1, guide §1.2 "per-task work")."""
-    return F.expr(
-        f"""
-        case when size(split({col}, ' ')) >= {w}
-        then transform(
-            sequence(1, size(split({col}, ' ')) - {w - 1}),
-            i -> concat_ws(' ', slice(split({col}, ' '), i, {w}))
-        )
-        else array() end
-        """
-    )
-
-
-def token_windows_arr(toks: F.Column, w: int = RUN_W) -> F.Column:
-    """token_windows over a PRE-SPLIT tokens array column (a bound
-    attribute, so the lambda does not re-split the text per window)."""
-    return F.when(
-        F.size(toks) >= w,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - F.lit(w - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, w)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
 def span_islands_agg(dup_positions: DataFrame, w: int = RUN_W) -> DataFrame:
     """Interval-union duplicated window starts into MAXIMAL disjoint
     spans per doc, returned as ONE ascending array column per document:
@@ -1557,8 +1514,11 @@ def _dup_positions(
     docs: DataFrame, w: int = RUN_W, max_window_df: int | None = None
 ) -> DataFrame:
     """(doc_id, pos) of every cross-document-duplicated window — the
-    shared detection stage of dup_span_intervals{,_agg}."""
-    wins = doc_window_positions(docs, w=w)
+    shared detection stage of dup_span_intervals{,_agg}. The batch scan
+    is spread before the window explode+hash (sources.spread_for_fanout:
+    a no-op unless the input arrives in too few splits to occupy the
+    cores); the streaming probe reaches doc_window_positions directly."""
+    wins = doc_window_positions(spread_for_fanout(docs), w=w)
     if max_window_df is not None:
         shared = (
             wins.groupBy("h")
@@ -1741,8 +1701,9 @@ def _foreign_positions(
 ) -> DataFrame:
     """(doc_id, pos) of every foreign-duplicated window (keep-first:
     the hash's MIN doc owns its copy) — the shared detection stage of
-    foreign_dup_spans{,_agg}."""
-    wins = doc_window_positions(docs, w=RUN_W)
+    foreign_dup_spans{,_agg}. Spread before the explode+hash, as in
+    :func:`_dup_positions`."""
+    wins = doc_window_positions(spread_for_fanout(docs), w=RUN_W)
     if max_window_df is not None:
         owners = (
             wins.groupBy("h")
@@ -1955,12 +1916,21 @@ def doc_window_positions(docs: DataFrame, w: int = RUN_W) -> DataFrame:
     docs; ownership is min doc_id per hash), so any collision-free hash
     of the window text yields identical spans; equality to the md5-keyed
     DuckDB oracles is re-verified by selfcheck at sf0.001/0.01/0.1.
-    Distinct-hash counts match hash60's exactly at sf0.1 (224,694)."""
+    Distinct-hash counts match hash60's exactly at sf0.1 (224,694).
+
+    The hash is taken over each window's token slice (window_hashes), so
+    no window string is built; docs shorter than ``w`` tokens have no
+    full-width window and contribute no rows (exactness is the point of
+    this modality). No spread here: the streaming job calls this with a
+    fresh micro-batch frame every batch, so the batch callers spread."""
     return docs.select(
         "doc_id", F.split("text", " ").alias("_toks")
     ).select(
-        "doc_id", F.posexplode(token_windows_arr(F.col("_toks"), w=w)).alias("pos", "w")
-    ).select("doc_id", "pos", F.xxhash64("w").alias("h"))
+        "doc_id",
+        F.posexplode(window_hashes(F.col("_toks"), w, whole_if_short=False)).alias(
+            "pos", "h"
+        ),
+    )
 
 
 def incremental_dup_spans(

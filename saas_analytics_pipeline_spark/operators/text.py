@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from saas_analytics_pipeline_spark.functions import window_hashes
 from saas_analytics_pipeline_spark.qcatalog import query
 from saas_analytics_pipeline_spark.sources import load_table
 
@@ -473,19 +474,7 @@ def q_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.split("text", " ").alias("_toks")
     ).select(
         "doc_id",
-        F.explode(
-            F.transform(
-                F.expr(
-                    """
-                    transform(
-                        sequence(1, greatest(size(_toks) - 1, 1)),
-                        i -> concat_ws(' ', slice(_toks, i, 2))
-                    )
-                    """
-                ),
-                lambda _s: F.xxhash64(_s),
-            )
-        ).alias("bigram"),
+        F.explode(window_hashes(F.col("_toks"), 2)).alias("bigram"),
     )
     freq = (
         bigrams.groupBy("doc_id", "bigram")

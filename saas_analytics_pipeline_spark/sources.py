@@ -53,7 +53,8 @@ def table_path(sf_dir: str, name: str) -> str:
 _RELATION_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 _CONFS_DONE: set[str] = set()
 # spread_for_fanout decision cache: (applicationId, id(input df)) ->
-# (input df, spread result). Holding the input ref keeps the id() stable.
+# (input df, spread result), for _RELATION_CACHE frames only. Holding the
+# input ref keeps the id() stable.
 _SPREAD_CACHE: dict[tuple[str, int], tuple[DataFrame, DataFrame]] = {}
 
 
@@ -144,32 +145,38 @@ def load_evolved(spark: SparkSession, path: str) -> DataFrame:
 
 
 def spread_for_fanout(df: DataFrame) -> DataFrame:
-    """Redistribute a scan that cannot parallelize BEFORE a high-fan-out
-    per-row expansion (shingle/token explode).
+    """Redistribute a scan that cannot parallelize BEFORE a CPU-heavy
+    per-row stage: a high-fan-out expansion (shingle/token window
+    explode + hash) or a costly per-row projection (the HTML synthesis
+    and regex extraction chain of q_html_extract).
 
     The bench testdata writes each table as a single one-row-group parquet
     file; a row group is unsplittable, so every downstream expression —
-    including a 150x shingle explode — runs in ONE task while 31 cores
-    idle (docs/SCALE.md "scan-parallelism ceiling"). The standard fix for
-    unsplittable inputs (same as gzipped text) is one round-robin
-    repartition of the RAW rows before the fan-out: it moves the corpus
-    exactly once at 1x volume (vs the 150x exploded volume a later
+    including a 150x shingle explode — runs in ONE task while the other
+    cores idle (docs/SCALE.md "scan-parallelism ceiling"). The standard
+    fix for unsplittable inputs (same as gzipped text) is one round-robin
+    repartition of the RAW rows before the heavy stage: it moves the
+    corpus exactly once at 1x volume (vs the 150x exploded volume a later
     key-shuffle would carry) and unlocks full parallelism for the
-    expansion.
+    expansion or projection.
 
     On a real lake the scan arrives in many splits and this is a NO-OP
-    (the guard below) — so the 100 TB invariant "text never key-shuffles"
-    still holds: the only Exchange that may carry text is this
-    conditional, volume-neutral spread, and only on degenerate layouts.
-    Results are partition-order-independent for every catalog query by
-    design, so the redistribution cannot change any value.
+    (the guard below: the input must have at most half of
+    defaultParallelism partitions) — so the 100 TB invariant "text never
+    key-shuffles" still holds: the only Exchange that may carry text is
+    this conditional, volume-neutral spread, and only on degenerate
+    layouts. Results are partition-order-independent for every catalog
+    query by design, so the redistribution cannot change any value.
 
     The partition-count probe (df.rdd.getNumPartitions) builds a
     plan-to-RDD conversion each call, so the decision is cached per
-    (session, relation): call sites pass load_table frames, which
-    _RELATION_CACHE dedups to one object per (app, sf_dir, table), so an
-    identity key gives one probe per table per session. The cached input
-    ref both pins the id() against reuse and keeps the guard exact."""
+    (session, relation) — but only for the frames load_table hands out,
+    which _RELATION_CACHE dedups to one object per (app, sf_dir, table):
+    an identity key then gives one probe per table per session. Any other
+    frame (a filtered or semi-joined input built afresh per query
+    construction) is probed without caching, since its identity never
+    recurs and an entry for it could never hit. The cached input ref
+    both pins the id() against reuse and keeps the guard exact."""
     sc = df.sparkSession.sparkContext
     key = (sc.applicationId, id(df))
     hit = _SPREAD_CACHE.get(key)
@@ -177,5 +184,6 @@ def spread_for_fanout(df: DataFrame) -> DataFrame:
         return hit[1]
     target = sc.defaultParallelism
     out = df.repartition(target) if df.rdd.getNumPartitions() * 2 <= target else df
-    _SPREAD_CACHE[key] = (df, out)
+    if any(v is df for v in _RELATION_CACHE.values()):
+        _SPREAD_CACHE[key] = (df, out)
     return out

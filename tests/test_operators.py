@@ -91,6 +91,73 @@ def test_shingles(spark):
     assert got[1] == ["x y"]  # shorter than width: one truncated shingle
 
 
+def test_window_hashes_keep_short_doc_rules(spark):
+    """window_hashes hashes each w-token slice: equal slices hash equal
+    across docs; a short doc gets one whole-doc window (the shingles
+    rule) or, with whole_if_short=False, none (the exact-overlap rule)."""
+    from saas_analytics_pipeline_spark.functions import window_hashes
+
+    df = spark.createDataFrame(
+        [("a b c d",), ("x y",), ("b c d e",)], "text string"
+    ).select(F.split("text", " ").alias("t"))
+    whole = [r[0] for r in df.select(window_hashes(F.col("t"), 3)).collect()]
+    empty = [
+        r[0]
+        for r in df.select(
+            window_hashes(F.col("t"), 3, whole_if_short=False)
+        ).collect()
+    ]
+    assert [len(h) for h in whole] == [2, 1, 2]
+    assert [len(h) for h in empty] == [2, 0, 2]
+    assert whole[0][1] == whole[2][0]  # both are the slice [b, c, d]
+    assert whole[0][0] != whole[0][1]
+    assert empty[0] == whole[0]
+
+
+def test_window_hashes_biject_with_window_strings(spark, sf_dir):
+    """On the fixture documents, hashing token slices partitions the
+    windows exactly as the joined window strings do: as many distinct
+    hashes as distinct strings, and as many distinct (hash, string)
+    pairs as either — so no two strings share a hash and no string gets
+    two hashes, for both the exact-overlap and the n-gram width."""
+    from saas_analytics_pipeline_spark.functions import window_hashes
+    from saas_analytics_pipeline_spark.operators.corpus import NGRAM_W
+    from saas_analytics_pipeline_spark.operators.dedup import RUN_W
+    from saas_analytics_pipeline_spark.sources import load_table
+
+    toks = load_table(spark, sf_dir, "documents").select(
+        F.split("text", " ").alias("t")
+    )
+    for w, whole_if_short in ((RUN_W, False), (NGRAM_W, True)):
+        n = F.size("t") - (w - 1)
+        strings = F.transform(
+            F.sequence(F.lit(1), F.greatest(n, F.lit(1))),
+            lambda i: F.array_join(F.slice("t", i, w), " "),
+        )
+        if not whole_if_short:
+            strings = F.when(n >= 1, strings).otherwise(
+                F.array().cast("array<string>")
+            )
+        pairs = toks.select(
+            F.explode(
+                F.arrays_zip(
+                    window_hashes(F.col("t"), w, whole_if_short).alias("h"),
+                    strings.alias("s"),
+                )
+            ).alias("z")
+        ).select("z.h", "z.s")
+        got = pairs.agg(
+            F.count_distinct("h").alias("nh"),
+            F.count_distinct("s").alias("ns"),
+            F.count_distinct("h", "s").alias("nhs"),
+            F.count("*").alias("n"),
+            F.count("h").alias("n_h"),
+            F.count("s").alias("n_s"),
+        ).first()
+        assert got["n"] == got["n_h"] == got["n_s"] > 0, (w, got)
+        assert got["nh"] == got["ns"] == got["nhs"], (w, got)
+
+
 def test_near_dup_pairs_finds_planted_dup(spark):
     base = "the quick brown fox jumps over the lazy dog again and again today"
     near = base.replace("today", "tomorrow")

@@ -748,8 +748,11 @@ def test_rrf_fusion_candidate_lists_are_take_ordered(spark, sf_dir):
 
 def test_html_extract_text_dies_in_scan(spark, sf_dir):
     """q_html_extract: synthesis + extraction are scan-local codegen — no
-    Exchange may carry html/extracted/text; only the per-source partial
-    aggregates shuffle (the funnel's step-zero contract)."""
+    Exchange may carry html/extracted; only the per-source partial
+    aggregates key-shuffle (the funnel's step-zero contract). Raw text
+    may cross exactly one Exchange: the conditional round-robin spread
+    ahead of synthesis (sources.spread_for_fanout), as q_contamination's
+    does — pinned by test_corpus_kernels_spread_single_split_scan_once."""
     import re
 
     from saas_analytics_pipeline_spark.operators.curation import (
@@ -1177,3 +1180,67 @@ def test_dup_span_capped_path_has_no_per_hash_window_sort(spark, sf_dir):
         # allowed; none may partition by the hash h
         assert "windowspecdefinition(h" not in plan.replace(" ", ""), plan
         assert "partial_count(distinct" in plan, plan
+
+
+def exchanges(df) -> list[tuple[str, str]]:
+    """(input columns, arguments) of every shuffle Exchange in ``df``'s
+    formatted plan (BroadcastExchange excluded)."""
+    import re
+
+    return re.findall(
+        r"\(\d+\) Exchange\nInput \[\d+\]: \[([^\]]*)\]\nArguments: ([^\n]*)",
+        plan_of(df),
+    )
+
+
+def test_corpus_kernels_spread_single_split_scan_once(spark, sf_dir):
+    """The single-file fixture scans as one unsplittable row group, so
+    q_html_extract and q_dup_spans each spread the raw documents exactly
+    once (one RoundRobinPartitioning Exchange) before their CPU-heavy
+    per-row stage; html and extracted text never enter any Exchange."""
+    import re
+
+    from saas_analytics_pipeline_spark.operators.curation import q_html_extract
+    from saas_analytics_pipeline_spark.operators.dedup import q_dup_spans
+
+    assert load_table(spark, sf_dir, "documents").rdd.getNumPartitions() == 1
+    for q in (q_html_extract, q_dup_spans):
+        ex = exchanges(q(spark, sf_dir))
+        spreads = [i for i, a in ex if a.startswith("RoundRobinPartitioning")]
+        assert len(spreads) == 1, (q.__name__, ex)
+        assert re.search(r"\btext#", spreads[0]), (q.__name__, spreads)
+        for inp, _ in ex:
+            assert not re.search(r"\b(html|extracted)#", inp), (q.__name__, inp)
+
+
+def test_spread_absent_when_input_already_fans_out(spark, sf_dir):
+    """spread_for_fanout is a no-op once the input has at least
+    defaultParallelism partitions (the multi-split lake case): the only
+    round-robin Exchange left in dup_span_intervals is the caller's own."""
+    from saas_analytics_pipeline_spark.operators.dedup import dup_span_intervals
+
+    n = max(8, spark.sparkContext.defaultParallelism)
+    docs = load_table(spark, sf_dir, "documents").repartition(n)
+    spreads = [
+        a
+        for _, a in exchanges(dup_span_intervals(docs))
+        if a.startswith("RoundRobinPartitioning")
+    ]
+    assert len(spreads) == 1, spreads
+    assert spreads[0].startswith(f"RoundRobinPartitioning({n})"), spreads
+
+
+def test_spread_cache_holds_only_relation_frames(spark, sf_dir):
+    """spread_for_fanout caches its decision only for load_table's
+    relation frames: q_dedup_lsh_incremental spreads a semi-joined docs
+    frame built afresh on each construction, and re-constructing the key
+    must not grow the cache with entries that can never hit."""
+    from saas_analytics_pipeline_spark.operators.dedup import (
+        q_dedup_lsh_incremental,
+    )
+    from saas_analytics_pipeline_spark.sources import _SPREAD_CACHE
+
+    q_dedup_lsh_incremental(spark, sf_dir)
+    n = len(_SPREAD_CACHE)
+    q_dedup_lsh_incremental(spark, sf_dir)
+    assert len(_SPREAD_CACHE) == n
