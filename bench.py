@@ -75,82 +75,67 @@ HEADLINE_CURATION = [
     "q_dedup_lsh_incremental",
 ]
 
-# r08: the r07/r08 families the scaling record must cover (VERDICT r07 #1
-# — the catalog's newest scale claims need a measured sf slope): assign-only
-# ANN ingest, zero-shuffle Misra-Gries, iterated joins (fixed and
-# converged), scan-side markup strip, and the zero-Exchange bucketed join.
-HEADLINE_R08 = [
+# r08-r13: the lake, commit-path and publish-layer families, one entry
+# per certified cost shape, in the order the rounds added them. Tracked so
+# a regression in iteration discipline, commit overhead, a lost route or a
+# broken bucket spec shows up as a timing step.
+HEADLINE_LAKE = [
+    # r08 (VERDICT r07 #1 — the catalog's newest scale claims need a
+    # measured sf slope): assign-only ANN ingest, zero-shuffle
+    # Misra-Gries, iterated joins (fixed and converged), scan-side markup
+    # strip, and the zero-Exchange bucketed join
     "q_similarity_ivf_incremental",
     "q_heavy_hitters",
     "q_pagerank",
     "q_pagerank_converged",
     "q_html_extract",
     "q_bucket_join",
-]
-
-# r09: the commit-path families — connected components under the
-# convergence contract (the dedup APPLY step, iterated to fixpoint with
-# n_iters certified), the publish protocol's replay/retention lifecycle,
-# and the registry DAG build through atomic TABLE publishes. Tracked so a
-# regression in the iteration discipline or commit overhead shows up as a
-# timing step.
-HEADLINE_R09 = [
+    # r09: connected components under the convergence contract (the
+    # dedup APPLY step, iterated to fixpoint with n_iters certified), the
+    # publish protocol's replay/retention lifecycle, and the registry DAG
+    # build through atomic TABLE publishes
     "q_dedup_clusters_converged",
     "q_publish_lifecycle",
     "q_registry_build",
-    # the exact-substring family + the wired ANN loop: the round's new
-    # cost shapes (window explode -> hash index; token-touch rewrite
-    # join; assign/gauge/refit/fold cycle)
+    # r09: the exact-substring family + the wired ANN loop (window
+    # explode -> hash index; token-touch rewrite join; assign/gauge/
+    # refit/fold cycle)
     "q_dup_spans",
     "q_dup_spans_rewrite",
     "q_ann_maintenance",
-]
-
-# r10: table-format maintenance — manifest-side file skipping over
-# per-file stats, OPTIMIZE bin-packing (fragmented write + pack commit),
-# and merge-on-read deletes + purge. Tracked so commit/maintenance
-# overhead regressions (an accidental full-table rewrite, a skipped-file
-# scan) show up as a timing step.
-HEADLINE_R10 = [
+    # r10: table-format maintenance — manifest-side file skipping over
+    # per-file stats, OPTIMIZE bin-packing (fragmented write + pack
+    # commit), and merge-on-read deletes + purge
     "q_stats_skipping",
     "q_optimize_compact",
     "q_mor_delete",
     "q_schema_evolution_lake",
     "q_txn_commit",
-]
-
-# r11: the publish-layer routing + co-location certificates — manifest
-# bucket specs (zero-Exchange fact-fact joins through the protocol) and
-# predicate-routed reads (partition/stats/compound file pruning). Tracked
-# so a lost route or a broken bucket spec shows up as a timing step.
-HEADLINE_R11 = [
+    # r11: manifest bucket specs (zero-Exchange fact-fact joins through
+    # the protocol) and predicate-routed reads (partition/stats/compound
+    # file pruning)
     "q_bucket_manifest",
     "q_predicate_routing",
     "q_catalog_maintain",
     "q_stream_lake_maint",
-]
-HEADLINE_R12 = [
-    # predicate routing over CATALOG tables (landed late in r11 without a
-    # bench row — VERDICT r11 #4)
+    # r12: predicate routing over CATALOG tables (VERDICT r11 #4), the
+    # bucketed partitioned fact-fact join through the publish protocol,
+    # and file-scoped deletion vectors (GDPR delete -> resubscribe ->
+    # optimize)
     "q_catalog_routing",
-    # bucketed partitioned fact-fact join through the publish protocol
     "q_bucket_partitioned",
-    # file-scoped deletion vectors: GDPR delete -> resubscribe -> optimize
     "q_delete_vectors",
-]
-
-HEADLINE_R13 = [
-    # bucketed-partitioned OPTIMIZE: registers purged through the
-    # bucketed writer, co-location preserved (VERDICT r12 #4). NOTE:
+    # r13: bucketed-partitioned OPTIMIZE, registers purged through the
+    # bucketed writer with co-location preserved (VERDICT r12 #4). NOTE:
     # the timing covers SEVEN sequential lineage commits (2 publishes,
     # delete, resubscribe, eager p1, OPTIMIZE rewrite, p2) — expect
     # several seconds; the cost is the lifecycle, not a plan regression
     "q_optimize_bucketed",
-    # bucketed partitioned facts + bucketed dim inside the catalog unit,
-    # one-swap commit + zero-Exchange star join (VERDICT r12 #5)
+    # r13: bucketed partitioned facts + bucketed dim inside the catalog
+    # unit, one-swap commit + zero-Exchange star join (VERDICT r12 #5)
     "q_catalog_bucketed_partitioned",
-    # catalog-table lifecycle: delete -> resubscribe increment, stats-
-    # narrowed reconcile, both phases through the co-located readers
+    # r13: catalog-table lifecycle — delete -> resubscribe increment,
+    # stats-narrowed reconcile, both phases through the co-located readers
     "q_catalog_increment",
 ]
 
@@ -159,12 +144,7 @@ HEADLINE = (
     + HEADLINE_TPCH
     + HEADLINE_CORPUS
     + HEADLINE_CURATION
-    + HEADLINE_R08
-    + HEADLINE_R09
-    + HEADLINE_R10
-    + HEADLINE_R11
-    + HEADLINE_R12
-    + HEADLINE_R13
+    + HEADLINE_LAKE
 )
 
 

@@ -1624,21 +1624,9 @@ def q_lake_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         pass
     P.publish_next(spark, v3, root)  # reclaims the orphan's seq
 
-    # the queryable history: walk the chain, re-read every version
-    chain = []
-    m = P.current_manifest(root)
-    while m is not None:
-        chain.append(m)
-        parent = m.get("parent")
-        m = None
-        if parent:
-            import json as _json
-            import os as _os
-
-            with open(_os.path.join(root, "manifests", parent)) as f:
-                m = _json.load(f)
+    # the queryable history: walk the lineage, re-read every version
     out = None
-    for man in reversed(chain):
+    for man in reversed(list(P._lineage(root, P.current_manifest(root)))):
         ver = (
             P.read_snapshot(spark, root, txid=man["txid"])
             .agg(

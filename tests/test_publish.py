@@ -5,6 +5,8 @@ never torn."""
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import os
 
 import pytest
@@ -1070,7 +1072,7 @@ def test_vacuum_catalog_keeps_retained_sets(spark, cat, backend):
     assert _snap(P.read_catalog_table(spark, cat, "fact")) == _snap(
         _fact(spark, 3)
     )
-    with pytest.raises(FileNotFoundError):
+    with pytest.raises(FileNotFoundError, match="retention"):
         P.read_catalog_table(spark, cat, "fact", seq=1)
 
 
@@ -1692,6 +1694,191 @@ def test_maintain_catalog_refuses_to_clobber_concurrent_commit(
     # the newer commit stands
     assert _snap(P.read_catalog_table(spark, cat, "fact")) == _snap(
         _fact(spark, 9)
+    )
+
+
+@contextlib.contextmanager
+def _race_after_first_pointer_read(monkeypatch, racer):
+    """Land ``racer``'s commit right after the writer's first pointer
+    read, so the writer's conditional PUT misses."""
+    real_read = P.ConditionalPutBackend.read_pointer
+    state = {"interposed": False}
+
+    def read_then_race(self, root):
+        out = real_read(self, root)
+        if not state["interposed"]:
+            state["interposed"] = True
+            racer()
+        return out
+
+    with monkeypatch.context() as mp:
+        mp.setattr(P.ConditionalPutBackend, "read_pointer", read_then_race)
+        yield
+
+
+@pytest.mark.parametrize(
+    "writer, race",
+    [
+        ("stats", "snapshot"),
+        ("bucketed", "snapshot"),
+        ("catalog_deletes", "same_table"),
+        ("catalog_deletes", "other_table"),
+        ("catalog_increments", "same_table"),
+        ("catalog_increments", "other_table"),
+    ],
+)
+def test_lost_put_follows_writer_conflict_policy(
+    spark, root, cat, backend, monkeypatch, writer, race
+):
+    """A writer losing the conditional PUT follows its conflict policy:
+    the last-wins writers (publish_stats, publish_bucketed) re-derive
+    seq/parent on top of the winner; the touched-table catalog writers
+    (publish_catalog_deletes, publish_catalog_increments) refuse when
+    the winner touched their table and commit on top when it did not."""
+    if backend is P.LOCAL:
+        pytest.skip("the fence serializes whole publishes on local")
+    cp = P.CONDITIONAL_PUT
+    if race == "snapshot":
+        P.publish_snapshot(spark, _frame(spark, 1), root, "tx1")
+        with _race_after_first_pointer_read(
+            monkeypatch,
+            lambda: P.publish_snapshot(spark, _frame(spark, 2), root, "txB"),
+        ):
+            if writer == "stats":
+                P.publish_stats(spark, root, ["k"], backend=cp)
+            else:
+                P.publish_bucketed(
+                    spark, _frame(spark, 3), root, "k", 4, "txA", backend=cp
+                )
+        m = P.current_manifest(root)
+        assert m["seq"] == 3 and m["parent"] == "manifest-txB.json"
+        if writer == "stats":
+            # the stats are re-derived over the WINNER's files
+            winner = P.snapshot_manifest(root, txid="txB")
+            assert m["files"] == winner["files"]
+            assert sorted(m["stats"]) == sorted(winner["files"])
+            assert _snap(P.read_current(spark, root)) == _snap(_frame(spark, 2))
+        else:
+            assert m["txid"] == "txA" and m["bucket"]["n"] == 4
+            assert _snap(P.read_current(spark, root)) == _snap(_frame(spark, 3))
+        return
+
+    def fact(tag):
+        return _fact(spark, tag).withColumn("p", F.col("k") % 4)
+
+    P.publish_tables(
+        spark, {"fact": fact(1), "dim": _dim(spark, 1)}, cat,
+        backend=cp, partitions={"fact": "p"},
+    )
+    target = "fact" if race == "same_table" else "dim"
+    winner = fact(9) if target == "fact" else _dim(spark, 9)
+
+    def racer():
+        P.publish_tables(
+            spark, {target: winner}, cat, txid="w9", backend=cp,
+            partitions={"fact": "p"},
+        )
+
+    inc = fact(5).where(F.col("p") == 1)
+    with _race_after_first_pointer_read(monkeypatch, racer):
+        if writer == "catalog_deletes":
+            write = functools.partial(
+                P.publish_catalog_deletes, spark, cat, "fact",
+                spark.createDataFrame([(3,)], "k long"), "k", backend=cp,
+            )
+            want = fact(1).where(F.col("k") != 3)
+        else:
+            write = functools.partial(
+                P.publish_catalog_increments, spark, cat, {"fact": inc},
+                backend=cp,
+            )
+            want = fact(1).where(F.col("p") != 1).unionByName(inc)
+        if race == "same_table":
+            with pytest.raises(P.ConcurrentPublishError, match="drifted"):
+                write()
+        else:
+            write()
+    rec = P.catalog_record(cat)
+    if race == "same_table":
+        # the newer commit stands
+        assert rec["txid"] == "w9" and rec["seq"] == 2
+        assert _snap(P.read_catalog_table(spark, cat, "fact")) == _snap(winner)
+    else:
+        assert rec["seq"] == 3 and rec["parent"] == "catalog-w9.json"
+        assert _snap(P.read_catalog_table(spark, cat, "fact")) == _snap(want)
+        assert _snap(P.read_catalog_table(spark, cat, "dim")) == _snap(winner)
+
+
+@pytest.mark.parametrize("form", ["whole", "partitioned", "tombstoned"])
+def test_pointer_and_catalog_readers_agree(spark, root, cat, backend, form):
+    """The same frame published once as a pointer table and once as a
+    catalog table reads back identically through every reader pair, with
+    identical route reports: bucketed whole-table, partitioned+bucketed,
+    and partitioned+bucketed carrying one global and one scoped
+    tombstone."""
+    f = _bp_fact(spark, 6)
+    spec = {"col": "ck", "n": 4}
+    tag = os.path.basename(str(root)) + "_" + form
+    if form == "whole":
+        P.publish_bucketed(spark, f, root, "ck", 4, "t1", backend=backend)
+        P.publish_tables(spark, {"f": f}, cat, backend=backend, buckets={"f": spec})
+        bucketed = (
+            P.read_bucketed(spark, root, "pp_" + tag),
+            P.read_catalog_bucketed(spark, cat, "f", "pc_" + tag),
+        )
+        preds = [("ck", 2, 12)]
+        want = f
+    else:
+        P.publish_partition_overwrite(
+            spark, f, root, "mk", bucket_col="ck", n_buckets=4
+        )
+        P.publish_tables(
+            spark, {"f": f}, cat, backend=backend, buckets={"f": spec},
+            partitions={"f": "mk"},
+        )
+        want = f
+        if form == "tombstoned":
+            keys = spark.createDataFrame([(3,), (5,)], "ck long")
+            P.publish_deletes(spark, keys, root, "ck")
+            P.publish_catalog_deletes(spark, cat, "f", keys, "ck", backend=backend)
+            # re-inserting ck=3 in one month while its stale copies survive
+            # in the carried months downgrades it to a scoped group
+            inc = spark.createDataFrame(
+                [(3, 199602, 7003)], "ck long, mk long, v6 long"
+            )
+            P.publish_partition_overwrite(
+                spark, inc, root, "mk", bucket_col="ck", n_buckets=4
+            )
+            P.publish_catalog_increments(spark, cat, {"f": inc}, backend=backend)
+            m = P.current_manifest(root)
+            assert len(m["deletes"]) == 1 and len(m["scoped_deletes"]) == 1
+            want = f.where(
+                (F.col("mk") != 199602) & ~F.col("ck").isin(3, 5)
+            ).unionByName(inc)
+        bucketed = (
+            P.read_bucketed_partitioned(spark, root, "pp_" + tag).drop("_p"),
+            P.read_catalog_bucketed_partitioned(
+                spark, cat, "f", "pc_" + tag
+            ).drop("_p"),
+        )
+        preds = [("mk", 199602, 199603), ("ck", 2, 12)]
+    pairs = [
+        (P.read_current(spark, root), P.read_catalog_table(spark, cat, "f")),
+        bucketed,
+    ]
+    for pointer_df, catalog_df in pairs:
+        assert _snap(pointer_df) == _snap(catalog_df) == _snap(want)
+    pdf, prep = P.read_where_all(spark, root, preds)
+    cdf, crep = P.read_catalog_where(spark, cat, "f", preds)
+    assert prep == crep
+    assert _snap(pdf) == _snap(cdf)
+    assert _snap(pdf) == _snap(
+        want.where(
+            functools.reduce(
+                lambda a, b: a & b,
+                [F.col(c).between(lo, hi) for c, lo, hi in preds],
+            )
+        )
     )
 
 
