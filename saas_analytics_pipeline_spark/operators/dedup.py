@@ -2045,13 +2045,10 @@ def q_dup_spans_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     index from carrying its hottest — least informative — entries.
 
     Reference scope: north-star extension (BASELINE.json)."""
-    import shutil
-
-    from saas_analytics_pipeline_spark.scratch import scratch_path
+    from saas_analytics_pipeline_spark.scratch import fresh_scratch
 
     docs = load_table(spark, sf_dir, "documents")
-    index_path = scratch_path("saas_dupspan_index", sf_dir)
-    shutil.rmtree(index_path, ignore_errors=True)
+    index_path = fresh_scratch("saas_dupspan_index", sf_dir)
     corpus = docs.where(F.col("doc_id") % 2 != 0)
     doc_window_positions(corpus).select("h").distinct().write.parquet(
         index_path

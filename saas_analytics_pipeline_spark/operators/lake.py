@@ -34,18 +34,193 @@ Scale notes (100 TB):
   listing any production compactor does) and the rewrite is one shuffle.
 - Merge-upsert (q_merge_upsert) broadcasts the increment's key set so the
   100 TB target side never shuffles (plans/incremental.py).
+
+Lifecycle helpers: the certificates share one lifecycle — build state
+from nothing, commit it through plans/publish.py (crashing some writes on
+purpose), hash what a reader sees — and each step of it lives in one
+place. ``scratch.fresh_scratch`` is the fresh-lineage prologue (the
+per-user scratch dir, emptied); ``session.scoped_confs`` sets a planning
+or write conf for one block and restores it; ``crash_at`` kills a write
+at a named commit barrier, lets any real failure of that write propagate
+and refuses a write that never reached the barrier. The frames the keys
+commit and hash come from a few builders (``orders_frame``,
+``bump_custkey``, ``scale_victim_prices``, ``with_month_key`` /
+``year_slice`` / ``first_half``, ``custkey_checksum``, ``bucket_rollup``,
+``cust_group_rollup``) that take each key's constants as arguments. Keys
+call the publish layer as ``P.name``, so wrappers installed on that
+module see every call.
 """
 
 from __future__ import annotations
 
+import datetime
+import json
+import math
 import os
+import shutil
+from collections.abc import Callable
+from functools import partial, reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from saas_analytics_pipeline_spark.functions import hash60, money, money_sum
+from saas_analytics_pipeline_spark.ingest import (
+    load_table_format,
+    write_table_format,
+)
+from saas_analytics_pipeline_spark.plans import publish as P
+from saas_analytics_pipeline_spark.plans.incremental import (
+    apply_cdc,
+    merge_upsert,
+    write_day_increment,
+)
+from saas_analytics_pipeline_spark.plans.writers import write_bucketed
 from saas_analytics_pipeline_spark.qcatalog import query
-from saas_analytics_pipeline_spark.scratch import scratch_path, sf_tag
+from saas_analytics_pipeline_spark.registry import Materialization, ModelRegistry
+from saas_analytics_pipeline_spark.scratch import (
+    fresh_scratch,
+    scratch_path,
+    sf_tag,
+)
+from saas_analytics_pipeline_spark.session import scoped_confs
 from saas_analytics_pipeline_spark.sources import load_table
+
+
+# ---------------------------------------------------------------------------
+# Shared certificate lifecycle: crash injection and the order frames the
+# keys publish, correct and roll up
+# ---------------------------------------------------------------------------
+
+
+class _Crash(Exception):
+    """The injected writer death. Private to crash_at, so a real failure
+    of the crashed write (a commit conflict, a bad frame) can never pass
+    for it."""
+
+
+def crash_at(barrier: str, write: Callable[..., object]) -> None:
+    """Run ``write(crash_hook=...)`` and kill it at ``barrier``, the
+    deterministic crash seam of the publish layer. Only the private
+    crash is caught: any other exception of the write propagates, and a
+    write that returns without reaching ``barrier`` raises — the
+    certificate would otherwise hash a state it never crashed into."""
+
+    def hook(reached: str) -> None:
+        if reached == barrier:
+            raise _Crash(barrier)
+
+    try:
+        write(crash_hook=hook)
+    except _Crash:
+        return
+    raise RuntimeError(f"crash barrier {barrier!r} was never reached")
+
+
+def orders_frame(spark: SparkSession, sf_dir: str, *extra: str) -> DataFrame:
+    """orders narrowed to (o_orderkey, o_custkey, o_totalprice) plus
+    ``extra`` columns: the table the publish certificates commit."""
+    return load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_totalprice", *extra
+    )
+
+
+def bump_custkey(df: DataFrame, mod: int, bump: int) -> DataFrame:
+    """A committed correction: o_custkey + ``bump`` on every order key
+    divisible by ``mod`` (loud in the custkey checksum if it leaks or
+    goes missing)."""
+    return df.withColumn(
+        "o_custkey",
+        F.when(
+            F.col("o_orderkey") % mod == 0, F.col("o_custkey") + bump
+        ).otherwise(F.col("o_custkey")),
+    )
+
+
+def with_month_key(df: DataFrame) -> DataFrame:
+    """``df`` plus ``mk`` = year * 100 + month of o_orderdate, the month
+    partition key of the partitioned certificates."""
+    return df.withColumn(
+        "mk", F.year("o_orderdate") * 100 + F.month("o_orderdate")
+    )
+
+
+def year_slice(orders: DataFrame, year: int) -> DataFrame:
+    """One year of orders, month-keyed."""
+    return with_month_key(orders.where(F.year("o_orderdate") == year))
+
+
+def first_half(orders: DataFrame, year: int) -> DataFrame:
+    """January to June of ``year``, month-keyed: the certificate-sized
+    slice of the partitioned GDPR and catalog certificates."""
+    return year_slice(orders, year).where(F.col("mk") <= year * 100 + 6)
+
+
+def scale_victim_prices(df: DataFrame, mod: int, factor: int) -> DataFrame:
+    """A resubscribe: o_totalprice * ``factor`` for every customer whose
+    key is divisible by ``mod`` (exact in binary for the small factors
+    used), so a visible victim row proves it came from the new file."""
+    return df.withColumn(
+        "o_totalprice",
+        F.when(
+            F.col("o_custkey") % mod == 0, F.col("o_totalprice") * factor
+        ).otherwise(F.col("o_totalprice")),
+    )
+
+
+def custkey_checksum() -> list[Column]:
+    """Row count and exact o_custkey sum: the state hash of a version."""
+    return [
+        F.count("*").alias("n_rows"),
+        F.sum("o_custkey").cast("long").alias("sum_custkey"),
+    ]
+
+
+def bucket_rollup(df: DataFrame, with_price: bool = True) -> DataFrame:
+    """custkey_checksum per ``o_orderkey % 10`` bucket, plus the exact
+    money total when ``with_price``."""
+    aggs = custkey_checksum()
+    if with_price:
+        aggs.append(money_sum("o_totalprice", "total_price"))
+    return df.groupBy((F.col("o_orderkey") % 10).alias("bucket")).agg(*aggs)
+
+
+def per_cust_revenue(t: DataFrame, out: str) -> DataFrame:
+    """Exact DECIMAL revenue per o_custkey, named ``out``."""
+    return t.groupBy("o_custkey").agg(F.sum(money("o_totalprice")).alias(out))
+
+
+def publish_custkey_buckets(
+    spark: SparkSession, df: DataFrame, root: str, n_buckets: int
+) -> None:
+    """Publish ``df`` month-partitioned on ``mk`` and bucketed by
+    o_custkey within each month: the daily-ingest fact layout."""
+    P.publish_partition_overwrite(
+        spark, df, root, "mk", bucket_col="o_custkey", n_buckets=n_buckets
+    )
+
+
+def segment_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The customer dim of the catalog star, staged under the JOIN key
+    name so the bucket column IS the join column on every edge."""
+    return load_table(spark, sf_dir, "customer").select(
+        F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
+    )
+
+
+def cust_group_rollup(t96: DataFrame, t97: DataFrame) -> DataFrame:
+    """The per-customer 1996 x 1997 revenue join of the bucketed
+    partitioned certificates, rolled up per ``o_custkey % 7`` group."""
+    return (
+        per_cust_revenue(t96, "rev96")
+        .join(per_cust_revenue(t97, "rev97"), "o_custkey")
+        .groupBy((F.col("o_custkey") % 7).alias("cg"))
+        .agg(
+            F.count("*").alias("n_cust"),
+            F.sum("rev96").cast("double").alias("rev96"),
+            F.sum("rev97").cast("double").alias("rev97"),
+        )
+    )
 
 # o_channel backfill tag for generation-B rows (deterministic from the key
 # so the DuckDB oracle replays it without reading the written files)
@@ -131,9 +306,7 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_rows"),
             F.count("o_channel").cast("long").alias("n_with_channel"),
             F.countDistinct("o_channel").alias("n_channels"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_price"),
+            money_sum("o_totalprice", "total_price"),
         )
         .orderBy("gen")
     )
@@ -209,9 +382,7 @@ def q_layout_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_rows"),
             F.countDistinct("o_custkey").alias("n_cust"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_price"),
+            money_sum("o_totalprice", "total_price"),
         )
         .orderBy("o_orderstatus")
     )
@@ -276,10 +447,8 @@ def write_zordered(spark: SparkSession, sf_dir: str) -> str:
     # own encoding). Scoped to THIS write: the session conf is saved and
     # restored so an unrelated later write in the same session keeps its
     # own timestamp encoding (e.g. for INT96-expecting consumers).
-    conf_key = "spark.sql.parquet.outputTimestampType"
-    prev = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, "TIMESTAMP_MICROS")
-    try:
+    micros = {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"}
+    with scoped_confs(spark, micros):
         (
             coded.repartitionByRange(ZORDER_FILES, "_z")
             .sortWithinPartitions("_z")
@@ -287,11 +456,6 @@ def write_zordered(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(base)
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev)
     return base
 
 
@@ -346,9 +510,7 @@ def q_layout_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_rows"),
             F.countDistinct("o_custkey").alias("n_cust"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_price"),
+            money_sum("o_totalprice", "total_price"),
         )
         .orderBy("o_orderpriority")
     )
@@ -389,8 +551,6 @@ def q_compaction_gauge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rewrite is one round-robin shuffle, embarrassingly parallel. At
     100 TB the same job runs per partition (dt/source), so the shuffle
     is bounded by a partition, not the table."""
-    import math
-
     base = scratch_path("saas_lake_compact", sf_dir)
     frag_path = os.path.join(base, "frag")
     compact_path = os.path.join(base, "compact")
@@ -414,9 +574,7 @@ def q_compaction_gauge(spark: SparkSession, sf_dir: str) -> DataFrame:
     after = compacted.agg(
         F.countDistinct("_file").alias("files_after"),
         F.count("*").alias("n_rows"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("total_price"),
+        money_sum("o_totalprice", "total_price"),
     )
     return before.join(F.broadcast(after))
 
@@ -467,15 +625,7 @@ def q_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     one shuffle keyed by partition so each period lands in few large
     files, and the commit is a pointer rename (crash-safe, unlike the
     in-place dynamic mode this key used before r09)."""
-    import shutil
-
-    from saas_analytics_pipeline_spark.plans import publish as P
-    from saas_analytics_pipeline_spark.plans.incremental import (
-        write_day_increment,
-    )
-
-    base = scratch_path("saas_lake_povw", sf_dir)
-    shutil.rmtree(base, ignore_errors=True)  # fresh lineage per run
+    base = fresh_scratch("saas_lake_povw", sf_dir)  # fresh lineage per run
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
@@ -492,13 +642,7 @@ def q_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         P.read_current(spark, base)
         .groupBy("dt")
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.sum("o_custkey").cast("long").alias("sum_custkey"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_price"),
-        )
+        .agg(*custkey_checksum(), money_sum("o_totalprice", "total_price"))
         .orderBy("dt")
     )
 
@@ -563,21 +707,8 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         for seq, bump in ((1, UPSERT_BUMP // 2), (2, UPSERT_BUMP))
     ]
     increment = versions[0].unionByName(versions[1])
-
-    from saas_analytics_pipeline_spark.plans.incremental import merge_upsert
-
     merged = merge_upsert(spark, target_path, increment, "o_orderkey", "_seq")
-    return (
-        merged.groupBy((F.col("o_orderkey") % 10).alias("bucket"))
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.sum("o_custkey").cast("long").alias("sum_custkey"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_price"),
-        )
-        .orderBy("bucket")
-    )
+    return bucket_rollup(merged).orderBy("bucket")
 
 
 # --------------------------------------------------------------------------
@@ -767,17 +898,13 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("U")
         .alias("op"),
     )
-    from saas_analytics_pipeline_spark.plans.incremental import apply_cdc
-
     final = apply_cdc(base, changes, "c_custkey", "_seq")
     return (
         final.groupBy("c_nationkey")
         .agg(
             F.count("*").alias("n_rows"),
             F.sum("from_cdc").cast("long").alias("n_from_cdc"),
-            F.sum(F.col("c_acctbal").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_bal"),
+            money_sum("c_acctbal", "total_bal"),
         )
         .orderBy("c_nationkey")
     )
@@ -787,11 +914,38 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bucketed co-located join, keyed (the bucket_probe / test_plans shape
 # promoted to a hash-green result-identity certificate)
 # --------------------------------------------------------------------------
-_BUCKET_CONFS = {
-    # neither side of a 100 TB fact-fact join broadcasts; force the
-    # bucket-SMJ regime the certificate is about (scoped + restored)
-    "spark.sql.autoBroadcastJoinThreshold": "-1",
-}
+# neither side of a 100 TB fact-fact join broadcasts: the bucketed and
+# catalog certificates force the bucket-SMJ regime they are about
+# (scoped + restored)
+_NO_BROADCAST = {"spark.sql.autoBroadcastJoinThreshold": "-1"}
+
+
+def order_item_sides(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The two fact sides of the bucketed orderkey join: (orders keyed
+    with their priority, lineitem quantities under the orders key)."""
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderpriority"
+    )
+    items = load_table(spark, sf_dir, "lineitem").select(
+        F.col("l_orderkey").alias("o_orderkey"), "l_quantity"
+    )
+    return orders, items
+
+
+def priority_rollup(orders: DataFrame, items: DataFrame) -> DataFrame:
+    """The orderkey fact-fact join rolled up per order priority: items,
+    distinct orders, exact quantity."""
+    return (
+        orders.join(items, "o_orderkey")
+        .groupBy("o_orderpriority")
+        .agg(
+            F.count("*").alias("n_items"),
+            F.countDistinct("o_orderkey").alias("n_orders"),
+            money_sum("l_quantity", "total_qty"),
+        )
+    )
 
 
 def bucket_join_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -801,8 +955,6 @@ def bucket_join_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup reads pre-partitioned, pre-sorted buckets: zero Exchanges,
     zero Sorts on either side (pinned by tests/test_plans.py both for
     write_bucketed and for this frame)."""
-    from saas_analytics_pipeline_spark.plans.writers import write_bucketed
-
     # sanitized tag (sf_tag strips every non-identifier char, ADVICE r07)
     # + backtick quoting below, so a hostile sf_dir basename can neither
     # break nor inject into the DROP statement
@@ -813,31 +965,14 @@ def bucket_join_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cwd-dependent warehouse); a FRESH session's catalog doesn't know a
     # previous session's tables, so drop the entry if present AND clear
     # the leftover location before overwriting
-    import shutil
-
     for t in (t_orders, t_items):
         spark.sql(f"DROP TABLE IF EXISTS `{t}`")
         shutil.rmtree(os.path.join(base, t), ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority"
-    )
-    items = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("o_orderkey"), "l_quantity"
-    )
+    orders, items = order_item_sides(spark, sf_dir)
     write_bucketed(orders, t_orders, "o_orderkey", path=os.path.join(base, t_orders))
     write_bucketed(items, t_items, "o_orderkey", path=os.path.join(base, t_items))
-    return (
-        spark.table(t_orders)
-        .join(spark.table(t_items), "o_orderkey")
-        .groupBy("o_orderpriority")
-        .agg(
-            F.count("*").alias("n_items"),
-            F.countDistinct("o_orderkey").alias("n_orders"),
-            F.sum(F.col("l_quantity").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_qty"),
-        )
-        .orderBy("o_orderpriority")
+    return priority_rollup(spark.table(t_orders), spark.table(t_items)).orderBy(
+        "o_orderpriority"
     )
 
 
@@ -874,17 +1009,8 @@ def q_bucket_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     every subsequent join on the key reads co-located buckets — the
     amortization a daily orders x lineitem pipeline banks on. The
     rollup is partial-aggregable above the co-located join."""
-    prev = {k: spark.conf.get(k, None) for k in _BUCKET_CONFS}
-    for k, v in _BUCKET_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_confs(spark, _NO_BROADCAST):
         return bucket_join_frame(spark, sf_dir).localCheckpoint(eager=True)
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 # --------------------------------------------------------------------------
@@ -942,12 +1068,6 @@ def q_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ref: reference loads CSV into the warehouse and plans JSON seeds
     (data_gen/generate_and_load_script.py:188, README.md:21-23); this
     pins all four interchange paths."""
-    from saas_analytics_pipeline_spark.functions import hash60
-    from saas_analytics_pipeline_spark.ingest import (
-        load_table_format,
-        write_table_format,
-    )
-
     base = scratch_path("saas_lake_fmt_rt", sf_dir)
     src = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
@@ -975,10 +1095,7 @@ def q_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.bit_xor(row_hash).alias("checksum_xor"),
             ).select(F.lit(fmt).alias("fmt"), "*")
         )
-    out = per_fmt[0]
-    for df in per_fmt[1:]:
-        out = out.unionByName(df)
-    return out.orderBy("fmt")
+    return reduce(DataFrame.unionByName, per_fmt).orderBy("fmt")
 
 
 # --------------------------------------------------------------------------
@@ -1024,9 +1141,7 @@ def dpp_join_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("n_name")
         .agg(
             F.count("*").alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_price"),
+            money_sum("o_totalprice", "total_price"),
         )
         .orderBy("n_name")
     )
@@ -1119,46 +1234,18 @@ def q_atomic_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ref: the reference's loads are WRITE_TRUNCATE
     (data_gen/generate_and_load_script.py:188) — no crash story; this is
     the 100 TB-safe replacement."""
-    import shutil
-
-    from saas_analytics_pipeline_spark.plans import publish as P
-
-    root = scratch_path("saas_lake_publish", sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
+    root = fresh_scratch("saas_lake_publish", sf_dir)
+    orders = orders_frame(spark, sf_dir)
     P.publish_snapshot(spark, orders, root, "tx1")
-    corrected = orders.withColumn(
-        "o_custkey",
-        F.when(
-            F.col("o_orderkey") % 7 == 0, F.col("o_custkey") + PUB_BUMP
-        ).otherwise(F.col("o_custkey")),
-    )
-    P.publish_snapshot(spark, corrected, root, "tx2")
+    P.publish_snapshot(spark, bump_custkey(orders, 7, PUB_BUMP), root, "tx2")
     poisoned = orders.withColumn(
         "o_custkey", -F.col("o_custkey")
     ).withColumn("o_totalprice", F.lit(0.0))
-
-    def die(barrier: str) -> None:
-        if barrier == P.AFTER_MANIFEST:
-            raise RuntimeError("writer killed mid-commit")
-
-    try:
-        P.publish_snapshot(spark, poisoned, root, "tx3", crash_hook=die)
-    except RuntimeError:
-        pass
+    tx3 = partial(P.publish_snapshot, spark, poisoned, root, "tx3")
+    crash_at(P.AFTER_MANIFEST, tx3)
     cur = P.current_manifest(root)
     return (
-        P.read_current(spark, root)
-        .groupBy((F.col("o_orderkey") % 10).alias("bucket"))
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.sum("o_custkey").cast("long").alias("sum_custkey"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_price"),
-        )
+        bucket_rollup(P.read_current(spark, root))
         .select(F.lit(cur["txid"]).alias("txid"), "*")
         .orderBy("bucket")
     )
@@ -1224,40 +1311,15 @@ def q_publish_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ref: the reference's loads ride BigQuery's atomic WRITE_TRUNCATE
     (data_gen/generate_and_load_script.py:188); this is the replayable,
     retained equivalent a 100 TB lake needs."""
-    import shutil
-
-    from saas_analytics_pipeline_spark.plans import publish as P
-
-    root = scratch_path("saas_lake_lifecycle", sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    v1 = orders
-    v2 = v1.withColumn(
-        "o_custkey",
-        F.when(
-            F.col("o_orderkey") % 3 == 0, F.col("o_custkey") + LC_BUMP1
-        ).otherwise(F.col("o_custkey")),
-    )
-    v3 = v2.withColumn(
-        "o_custkey",
-        F.when(
-            F.col("o_orderkey") % 4 == 0, F.col("o_custkey") + LC_BUMP2
-        ).otherwise(F.col("o_custkey")),
-    )
+    root = fresh_scratch("saas_lake_lifecycle", sf_dir)
+    v1 = orders_frame(spark, sf_dir)
+    v2 = bump_custkey(v1, 3, LC_BUMP1)
+    v3 = bump_custkey(v2, 4, LC_BUMP2)
     P.ensure_published(spark, v1, root, "b1")
     P.ensure_published(spark, v2, root, "b2")
-
-    def die(barrier: str) -> None:
-        if barrier == P.AFTER_DATA:
-            raise RuntimeError("writer killed before the manifest")
-
-    try:
-        P.ensure_published(spark, v3, root, "b3", crash_hook=die)
-    except RuntimeError:
-        pass
-    P.ensure_published(spark, v3, root, "b3")  # the replay commits
+    b3 = partial(P.ensure_published, spark, v3, root, "b3")
+    crash_at(P.AFTER_DATA, b3)  # killed before the manifest
+    b3()  # the replay commits
     poisoned = v1.withColumn("o_custkey", -F.col("o_custkey"))
     P.ensure_published(spark, poisoned, root, "b2")  # stale: must skip
     P.vacuum(root, retain=1)  # keeps b3 + b2, reclaims b1
@@ -1265,15 +1327,7 @@ def q_publish_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_manifests = len(os.listdir(os.path.join(root, "manifests")))
     n_snapshots = len(os.listdir(os.path.join(root, "data")))
     return (
-        P.read_current(spark, root)
-        .groupBy((F.col("o_orderkey") % 10).alias("bucket"))
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.sum("o_custkey").cast("long").alias("sum_custkey"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_price"),
-        )
+        bucket_rollup(P.read_current(spark, root))
         .select(
             F.lit(cur["txid"]).alias("txid"),
             F.lit(n_manifests).cast("long").alias("n_manifests"),
@@ -1322,14 +1376,6 @@ def q_registry_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Ref: models/ layering `README.md:34-41`; materialization contract
     `dbt_project.yml:26-43`."""
-    import shutil
-
-    from saas_analytics_pipeline_spark.plans import publish as P
-    from saas_analytics_pipeline_spark.registry import (
-        Materialization,
-        ModelRegistry,
-    )
-
     poison = {"on": False}
     reg = ModelRegistry()
 
@@ -1357,26 +1403,14 @@ def q_registry_build(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(
                 F.count("*").alias("n_orders"),
                 F.countDistinct("o_custkey").cast("long").alias("n_customers"),
-                F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-                .cast("double")
-                .alias("revenue"),
+                money_sum("o_totalprice", "revenue"),
             )
         )
 
-    wh = scratch_path("saas_registry_build", sf_dir)
-    shutil.rmtree(wh, ignore_errors=True)
+    wh = fresh_scratch("saas_registry_build", sf_dir)
     reg.build(spark, warehouse_dir=wh)  # the clean, committed build
-
     poison["on"] = True
-
-    def die(barrier: str) -> None:
-        if barrier == P.AFTER_MANIFEST:
-            raise RuntimeError("build killed mid-commit")
-
-    try:
-        reg.build(spark, warehouse_dir=wh, crash_hook=die)
-    except RuntimeError:
-        pass
+    crash_at(P.AFTER_MANIFEST, partial(reg.build, spark, warehouse_dir=wh))
     return P.read_current(spark, f"{wh}/marts/rb_mart_monthly").orderBy(
         "month"
     )
@@ -1430,36 +1464,13 @@ def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ref: the reference's WRITE_TRUNCATE loads keep no history
     (data_gen/generate_and_load_script.py:188); BigQuery offers this
     same property as time travel — re-established here."""
-    import shutil
-
-    from saas_analytics_pipeline_spark.plans import publish as P
-
-    root = scratch_path("saas_lake_timetravel", sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
+    root = fresh_scratch("saas_lake_timetravel", sf_dir)
+    orders = orders_frame(spark, sf_dir)
     P.publish_next(spark, orders, root)  # seq 1
-    v2 = orders.withColumn(
-        "o_custkey",
-        F.when(
-            F.col("o_orderkey") % 5 == 0, F.col("o_custkey") + TT_BUMP
-        ).otherwise(F.col("o_custkey")),
-    )
-    P.publish_next(spark, v2, root)  # seq 2 = current
+    P.publish_next(spark, bump_custkey(orders, 5, TT_BUMP), root)  # seq 2
 
     def rollup(df: DataFrame, version: int) -> DataFrame:
-        return (
-            df.groupBy((F.col("o_orderkey") % 10).alias("bucket"))
-            .agg(
-                F.count("*").alias("n_rows"),
-                F.sum("o_custkey").cast("long").alias("sum_custkey"),
-                F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-                .cast("double")
-                .alias("total_price"),
-            )
-            .select(F.lit(version).alias("version"), "*")
-        )
+        return bucket_rollup(df).select(F.lit(version).alias("version"), "*")
 
     past = P.read_snapshot(spark, root, seq=1)
     current = P.read_current(spark, root)
@@ -1502,15 +1513,7 @@ def q_partition_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Ref: raw partitions by source/date `/root/reference/README.md:24`;
     this key adds the scalable read side of that layout."""
-    import shutil
-
-    from saas_analytics_pipeline_spark.plans import publish as P
-    from saas_analytics_pipeline_spark.plans.incremental import (
-        write_day_increment,
-    )
-
-    base = scratch_path("saas_lake_pruned_read", sf_dir)
-    shutil.rmtree(base, ignore_errors=True)
+    base = fresh_scratch("saas_lake_pruned_read", sf_dir)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
@@ -1521,10 +1524,7 @@ def q_partition_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_total = len(P.current_manifest(base)["partitions"])
     return (
         month.groupBy("dt")
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.sum("o_custkey").cast("long").alias("sum_custkey"),
-        )
+        .agg(*custkey_checksum())
         .select(
             "dt",
             F.lit(n_files).cast("long").alias("n_files_read"),
@@ -1589,39 +1589,16 @@ def q_lake_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Ref: BigQuery time travel / dbt snapshot history — the audit
     surface the reference's WRITE_TRUNCATE loads lack."""
-    import shutil
-
-    from saas_analytics_pipeline_spark.plans import publish as P
-
-    root = scratch_path("saas_lake_history", sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch("saas_lake_history", sf_dir)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey"
     )
-    v2 = orders.withColumn(
-        "o_custkey",
-        F.when(
-            F.col("o_orderkey") % 3 == 0, F.col("o_custkey") + LH_BUMP1
-        ).otherwise(F.col("o_custkey")),
-    )
-    v3 = v2.withColumn(
-        "o_custkey",
-        F.when(
-            F.col("o_orderkey") % 4 == 0, F.col("o_custkey") + LH_BUMP2
-        ).otherwise(F.col("o_custkey")),
-    )
+    v2 = bump_custkey(orders, 3, LH_BUMP1)
+    v3 = bump_custkey(v2, 4, LH_BUMP2)
     P.publish_next(spark, orders, root)
     P.publish_next(spark, v2, root)
-
-    def die(barrier: str) -> None:
-        if barrier == P.AFTER_MANIFEST:
-            raise RuntimeError("poisoned build killed mid-commit")
-
     poisoned = orders.withColumn("o_custkey", -F.col("o_custkey"))
-    try:
-        P.publish_next(spark, poisoned, root, crash_hook=die)
-    except RuntimeError:
-        pass
+    crash_at(P.AFTER_MANIFEST, partial(P.publish_next, spark, poisoned, root))
     P.publish_next(spark, v3, root)  # reclaims the orphan's seq
 
     # the queryable history: walk the lineage, re-read every version
@@ -1629,10 +1606,7 @@ def q_lake_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     for man in reversed(list(P._lineage(root, P.current_manifest(root)))):
         ver = (
             P.read_snapshot(spark, root, txid=man["txid"])
-            .agg(
-                F.count("*").alias("n_rows"),
-                F.sum("o_custkey").cast("long").alias("sum_custkey"),
-            )
+            .agg(*custkey_checksum())
             .select(
                 F.lit(int(man["seq"])).alias("seq"),
                 F.lit(man["txid"]).alias("txid"),
@@ -1706,12 +1680,7 @@ def q_publish_contention(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ref: BigQuery gives the reference atomic per-load commits
     (data_gen/generate_and_load_script.py:188); this certifies the
     multi-writer equivalent the manifest protocol adds."""
-    import shutil
-
-    from saas_analytics_pipeline_spark.plans import publish as P
-
-    root = scratch_path("saas_lake_contention", sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch("saas_lake_contention", sf_dir)
     orders = load_table(spark, sf_dir, "orders").select(
         (F.col("o_orderkey") % 4).alias("pk"), "o_custkey"
     )
@@ -1754,10 +1723,7 @@ def q_publish_contention(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         P.read_current(spark, root)
         .groupBy("pk")
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.sum("o_custkey").cast("long").alias("sum_custkey"),
-        )
+        .agg(*custkey_checksum())
         .select(
             F.lit(cur["txid"]).alias("txid"),
             F.lit(int(cur["seq"])).cast("long").alias("final_seq"),
@@ -1818,23 +1784,11 @@ def q_replay_horizon(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the ledger grows ~30 bytes per vacuumed commit (metadata);
     replay recognition is one dict lookup, no data touched."""
-    import shutil
-
-    from saas_analytics_pipeline_spark.plans import publish as P
-
-    root = scratch_path("saas_lake_replay_horizon", sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
+    root = fresh_scratch("saas_lake_replay_horizon", sf_dir)
+    orders = orders_frame(spark, sf_dir)
     v2 = orders.withColumn("o_custkey", F.col("o_custkey") + 1)
     v3 = orders.withColumn("o_custkey", F.col("o_custkey") + 2)
-    v4 = orders.withColumn(
-        "o_custkey",
-        F.when(
-            F.col("o_orderkey") % 5 == 0, F.col("o_custkey") + RH_BUMP
-        ).otherwise(F.col("o_custkey")),
-    )
+    v4 = bump_custkey(orders, 5, RH_BUMP)
     P.ensure_published(spark, orders, root, "b1")
     P.ensure_published(spark, v2, root, "b2")
     P.ensure_published(spark, v3, root, "b3")
@@ -1849,12 +1803,7 @@ def q_replay_horizon(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_snapshots = len(os.listdir(os.path.join(root, "data")))
     n_ledgered = len(P._applied_ledger(root))
     return (
-        P.read_current(spark, root)
-        .groupBy((F.col("o_orderkey") % 10).alias("bucket"))
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.sum("o_custkey").cast("long").alias("sum_custkey"),
-        )
+        bucket_rollup(P.read_current(spark, root), with_price=False)
         .select(
             F.lit(cur["txid"]).alias("txid"),
             F.lit(n_manifests).cast("long").alias("n_manifests"),
@@ -1941,18 +1890,8 @@ def q_stats_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ref: the reference clusters its BigQuery facts for the same reason
     (README.md:90-91 'partition + cluster keys'); file stats are the
     lake-side equivalent BigQuery does server-side."""
-    import datetime
-    import shutil
-
-    from pyspark.sql import Window
-
-    from saas_analytics_pipeline_spark.plans import publish as P
-
-    root = scratch_path("saas_lake_skipping", sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"
-    )
+    root = fresh_scratch("saas_lake_skipping", sf_dir)
+    orders = orders_frame(spark, sf_dir, "o_orderdate")
     # deterministic clustering: ntile over the date order (cert-sized
     # single-partition window; production = repartitionByRange)
     w = Window.orderBy("o_orderdate", "o_orderkey")
@@ -1971,9 +1910,7 @@ def q_stats_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_rows"),
             F.countDistinct("o_custkey").alias("n_cust"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_price"),
+            money_sum("o_totalprice", "total_price"),
         )
         .select(
             F.lit(n_total).cast("long").alias("n_files_total"),
@@ -2037,33 +1974,21 @@ def q_optimize_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's WRITE_TRUNCATE loads never fragment
     (data_gen/generate_and_load_script.py:188) — this is the lake-side
     equivalent the manifest protocol makes safe."""
-    import shutil
-
-    from saas_analytics_pipeline_spark.plans import publish as P
-
-    root = scratch_path("saas_lake_optimize", sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch("saas_lake_optimize", sf_dir)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderdate"
     )
     # a two-year slice: the certificate needs fragmented months, not the
     # whole table — the fragmented write's small-file count (and its
     # per-file fsync) is the only thing the slice bounds
-    monthly = orders.where(
-        F.year("o_orderdate").between(1996, 1997)
-    ).withColumn("mk", F.year("o_orderdate") * 100 + F.month("o_orderdate"))
-    conf_key = "spark.sql.files.maxRecordsPerFile"
-    prev_conf = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, str(OPT_MRPF))
-    try:
+    monthly = with_month_key(
+        orders.where(F.year("o_orderdate").between(1996, 1997))
+    )
+    cap = {"spark.sql.files.maxRecordsPerFile": str(OPT_MRPF)}
+    with scoped_confs(spark, cap):
         P.publish_partition_overwrite(
             spark, monthly.repartition(F.col("mk")), root, "mk"
         )
-    finally:
-        if prev_conf is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev_conf)
     before = P.current_manifest(root)
     P.optimize_table(spark, root)
     after = P.current_manifest(root)
@@ -2072,9 +1997,7 @@ def q_optimize_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         P.read_current(spark, root)
         .agg(
             F.count("*").alias("n_rows"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_price"),
+            money_sum("o_totalprice", "total_price"),
         )
         .select(
             F.lit(before["n_files"]).cast("long").alias("files_before"),
@@ -2161,15 +2084,8 @@ def q_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     a narrow key-range delete rewrites a handful of files, not the
     lake. Ref: the reference's BigQuery DML DELETE gives this
     server-side; this is the manifest-protocol equivalent."""
-    import shutil
-
-    from saas_analytics_pipeline_spark.plans import publish as P
-
-    root = scratch_path("saas_lake_mor", sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
+    root = fresh_scratch("saas_lake_mor", sf_dir)
+    orders = orders_frame(spark, sf_dir)
     df = orders.withColumn("pk", F.col("o_orderkey") % MOR_PARTS)
     P.publish_partition_overwrite(
         spark, df.repartition(F.col("pk")), root, "pk"
@@ -2192,10 +2108,7 @@ def q_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     def phase(
         tag: str, frame: DataFrame, seq: int, n_tomb: int, n_rw: int
     ) -> DataFrame:
-        return frame.agg(
-            F.count("*").alias("n_rows"),
-            F.sum("o_custkey").cast("long").alias("sum_custkey"),
-        ).select(
+        return frame.agg(*custkey_checksum()).select(
             F.lit(tag).alias("phase"),
             F.lit(seq).cast("long").alias("seq"),
             F.lit(n_tomb).cast("long").alias("n_tomb_files"),
@@ -2230,12 +2143,7 @@ def q_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p4_travel_del1", P.read_snapshot(spark, root, seq=2), 2,
         len(del1_m.get("deletes") or []), 0,
     )
-    return (
-        p1.unionByName(p2)
-        .unionByName(p3)
-        .unionByName(p4)
-        .orderBy("phase")
-    )
+    return reduce(DataFrame.unionByName, [p1, p2, p3, p4]).orderBy("phase")
 
 
 # ---------------------------------------------------------------------------
@@ -2288,24 +2196,11 @@ def q_schema_evolution_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ref: the reference's fixed per-source contract is
     models/schema.yml:1-141; BigQuery evolves via ALTER TABLE
     server-side — this is the lake-side equivalent on plain parquet."""
-    import shutil
-
-    from saas_analytics_pipeline_spark.plans import publish as P
-
-    root = scratch_path("saas_lake_schema_evo", sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"
-    )
+    root = fresh_scratch("saas_lake_schema_evo", sf_dir)
+    orders = orders_frame(spark, sf_dir, "o_orderdate")
 
     def month_slice(year: int) -> DataFrame:
-        return (
-            orders.where(F.year("o_orderdate") == year)
-            .withColumn(
-                "mk", F.year("o_orderdate") * 100 + F.month("o_orderdate")
-            )
-            .drop("o_orderdate")
-        )
+        return year_slice(orders, year).drop("o_orderdate")
 
     P.publish_partition_overwrite(
         spark, month_slice(1996).repartition(F.col("mk")), root, "mk"
@@ -2318,10 +2213,8 @@ def q_schema_evolution_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
         root,
         "mk",
     )
-    import json as _json
-
     m = P.current_manifest(root)
-    n_fields = len(_json.loads(m["schema"])["fields"])
+    n_fields = len(json.loads(m["schema"])["fields"])
     return (
         P.read_current(spark, root)
         .groupBy(F.expr("mk div 100").cast("int").alias("yr"))
@@ -2329,9 +2222,7 @@ def q_schema_evolution_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_rows"),
             F.count("o_channel").cast("long").alias("n_with_channel"),
             F.countDistinct("o_channel").alias("n_channels"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total_price"),
+            money_sum("o_totalprice", "total_price"),
         )
         .select(
             "yr",
@@ -2420,12 +2311,7 @@ def q_txn_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     one tiny catalog record + one pointer swap no matter how many
     tables change. Crash matrix + CAS backend + disjoint-writer merge
     in tests/test_publish.py."""
-    import shutil
-
-    from saas_analytics_pipeline_spark.plans import publish as P
-
-    cat = scratch_path("saas_lake_txn", sf_dir)
-    shutil.rmtree(cat, ignore_errors=True)
+    cat = fresh_scratch("saas_lake_txn", sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     fact1 = orders.select(
         "o_orderkey",
@@ -2464,32 +2350,17 @@ def q_txn_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     P.publish_tables(spark, {"fact": fact1, "dim": dim1}, cat)
     p1 = rollup("p1_v1", 1)
-
-    class _Boom(RuntimeError):
-        pass
-
-    def crash_after_dim(barrier: str) -> None:
-        if barrier == "staged:dim":
-            raise _Boom(barrier)
-
-    try:
-        P.publish_tables(
-            spark, {"fact": fact2, "dim": dim2}, cat, txid="v2",
-            crash_hook=crash_after_dim,
-        )
-    except _Boom:
-        pass
+    v2 = partial(
+        P.publish_tables, spark, {"fact": fact2, "dim": dim2}, cat, txid="v2"
+    )
+    crash_at("staged:dim", v2)
     cur_seq = int(P.catalog_record(cat)["seq"])  # still 1: crash invisible
     p2 = rollup("p2_after_crash", cur_seq)
-    P.publish_tables(spark, {"fact": fact2, "dim": dim2}, cat, txid="v2")
+    v2()
     p3 = rollup("p3_v2", int(P.catalog_record(cat)["seq"]))
     p4 = rollup("p4_travel_v1", 1)
-    return (
-        p1.unionByName(p2)
-        .unionByName(p3)
-        .unionByName(p4)
-        .orderBy("phase", "tier")
-    )
+    phases = [p1, p2, p3, p4]
+    return reduce(DataFrame.unionByName, phases).orderBy("phase", "tier")
 
 
 # ---------------------------------------------------------------------------
@@ -2500,8 +2371,7 @@ def q_txn_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _BUCKET_MANIFEST_CONFS = {
-    # neither side of a 100 TB fact-fact join broadcasts
-    "spark.sql.autoBroadcastJoinThreshold": "-1",
+    **_NO_BROADCAST,
     # publish_bucketed repartitions by the bucket hash so every bucket is
     # exactly ONE sorted file — the scan's per-bucket order is therefore
     # trustworthy; report it so the SMJ elides its Sorts (off by default
@@ -2528,39 +2398,17 @@ def bucket_manifest_phases(
     Returns (p1_all, p2_tombstoned); both stay valid frames — MOR
     deletes add tombstone files, they never touch the data dir p1
     scans."""
-    import shutil
-
-    from saas_analytics_pipeline_spark.plans import publish as P
-
     tag = sf_tag(sf_dir)
-    ro = scratch_path("saas_lake_bktman_orders", sf_dir)
-    ri = scratch_path("saas_lake_bktman_items", sf_dir)
-    for r in (ro, ri):
-        shutil.rmtree(r, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderpriority"
-    )
-    items = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("o_orderkey"), "l_quantity"
-    )
+    ro = fresh_scratch("saas_lake_bktman_orders", sf_dir)
+    ri = fresh_scratch("saas_lake_bktman_items", sf_dir)
+    orders, items = order_item_sides(spark, sf_dir)
     P.publish_bucketed(spark, orders, ro, "o_orderkey", 16, "tx1")
     P.publish_bucketed(spark, items, ri, "o_orderkey", 16, "tx1")
     to = P.read_bucketed(spark, ro, f"bm_orders_{tag}")
     ti = P.read_bucketed(spark, ri, f"bm_items_{tag}")
 
     def rollup(o: DataFrame, phase: str) -> DataFrame:
-        return (
-            o.join(ti, "o_orderkey")
-            .groupBy("o_orderpriority")
-            .agg(
-                F.count("*").alias("n_items"),
-                F.countDistinct("o_orderkey").alias("n_orders"),
-                F.sum(F.col("l_quantity").cast("decimal(18,2)"))
-                .cast("double")
-                .alias("total_qty"),
-            )
-            .select(F.lit(phase).alias("phase"), "*")
-        )
+        return priority_rollup(o, ti).select(F.lit(phase).alias("phase"), "*")
 
     p1 = rollup(to, "p1_all")
     P.publish_deletes(
@@ -2626,22 +2474,13 @@ def q_bucket_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     — reads co-located pre-sorted buckets through their manifests, and
     GDPR-grain deletes cost O(keys) tombstone metadata, never a
     rewrite."""
-    prev = {k: spark.conf.get(k, None) for k in _BUCKET_MANIFEST_CONFS}
-    for k, v in _BUCKET_MANIFEST_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_confs(spark, _BUCKET_MANIFEST_CONFS):
         p1, p2 = bucket_manifest_phases(spark, sf_dir)
         return (
             p1.unionByName(p2)
             .orderBy("phase", "o_orderpriority")
             .localCheckpoint(eager=True)
         )
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 # ---------------------------------------------------------------------------
@@ -2664,58 +2503,24 @@ def bucket_partitioned_frames(
     bucketed publish. Plan-pinned in tests/test_plans.py: zero shuffle
     Exchanges below the SortMergeJoin in both phases (per-bucket Sorts
     are partition-local and stay)."""
-    import shutil
-
-    from saas_analytics_pipeline_spark.plans import publish as P
-
     tag = sf_tag(sf_dir)
-    ra = scratch_path("saas_lake_bktp_96", sf_dir)
-    rb = scratch_path("saas_lake_bktp_97", sf_dir)
-    for r in (ra, rb):
-        shutil.rmtree(r, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"
-    )
-
-    def year_slice(y: int) -> DataFrame:
-        return orders.where(F.year("o_orderdate") == y).withColumn(
-            "mk", F.year("o_orderdate") * 100 + F.month("o_orderdate")
-        )
-
-    a, b = year_slice(1996), year_slice(1997)
-    P.publish_partition_overwrite(
-        spark, a, ra, "mk", bucket_col="o_custkey", n_buckets=8
-    )
-    P.publish_partition_overwrite(
-        spark, b, rb, "mk", bucket_col="o_custkey", n_buckets=8
-    )
+    ra = fresh_scratch("saas_lake_bktp_96", sf_dir)
+    rb = fresh_scratch("saas_lake_bktp_97", sf_dir)
+    orders = orders_frame(spark, sf_dir, "o_orderdate")
+    a, b = year_slice(orders, 1996), year_slice(orders, 1997)
+    publish_custkey_buckets(spark, a, ra, 8)
+    publish_custkey_buckets(spark, b, rb, 8)
 
     def rollup(phase: str) -> DataFrame:
         n_parts = len(P.current_manifest(ra)["partitions"])
         seq = int(P.current_manifest(ra)["seq"])
         ta = P.read_bucketed_partitioned(spark, ra, f"bp96_{tag}")
         tb = P.read_bucketed_partitioned(spark, rb, f"bp97_{tag}")
-
-        def per_cust(t: DataFrame, out: str) -> DataFrame:
-            return t.groupBy("o_custkey").agg(
-                F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias(out)
-            )
-
-        return (
-            per_cust(ta, "rev96")
-            .join(per_cust(tb, "rev97"), "o_custkey")
-            .groupBy((F.col("o_custkey") % 7).alias("cg"))
-            .agg(
-                F.count("*").alias("n_cust"),
-                F.sum("rev96").cast("double").alias("rev96"),
-                F.sum("rev97").cast("double").alias("rev97"),
-            )
-            .select(
-                F.lit(phase).alias("phase"),
-                F.lit(n_parts).cast("long").alias("n_partitions_96"),
-                F.lit(seq).cast("long").alias("seq_96"),
-                "*",
-            )
+        return cust_group_rollup(ta, tb).select(
+            F.lit(phase).alias("phase"),
+            F.lit(n_parts).cast("long").alias("n_partitions_96"),
+            F.lit(seq).cast("long").alias("seq_96"),
+            "*",
         )
 
     # Materialize phase 1 BEFORE the revision overwrite: the republish
@@ -2735,9 +2540,7 @@ def bucket_partitioned_frames(
     revised = a.where(F.col("mk") == 199606).withColumn(
         "o_totalprice", F.col("o_totalprice") * 2
     )
-    P.publish_partition_overwrite(
-        spark, revised, ra, "mk", bucket_col="o_custkey", n_buckets=8
-    )
+    publish_custkey_buckets(spark, revised, ra, 8)
     p2 = rollup("p2_revised")
     return p1, p2
 
@@ -2804,21 +2607,13 @@ def q_bucket_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Ref: the reference leans on BigQuery clustering within partitioned
     tables (README.md:90-91); this is the explicit lake-side twin."""
-    conf = "spark.sql.autoBroadcastJoinThreshold"
-    prev = spark.conf.get(conf, None)
-    spark.conf.set(conf, "-1")  # the 100 TB fact-fact regime
-    try:
+    with scoped_confs(spark, _NO_BROADCAST):
         p1, p2 = bucket_partitioned_frames(spark, sf_dir)
         return (
             p1.unionByName(p2)
             .orderBy("phase", "cg")
             .localCheckpoint(eager=True)
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, prev)
 
 
 # ---------------------------------------------------------------------------
@@ -2847,37 +2642,18 @@ def optimize_bucketed_frames(
     resolved — unlike a partition overwrite, the purge is exactly the
     compaction case where old files die at the NEXT vacuum, so the
     phase boundary is a real materialization barrier)."""
-    import shutil
-
-    from saas_analytics_pipeline_spark.plans import publish as P
-
     tag = sf_tag(sf_dir)
-    ra = scratch_path("saas_lake_optbkt_96", sf_dir)
-    rb = scratch_path("saas_lake_optbkt_97", sf_dir)
-    for r in (ra, rb):
-        shutil.rmtree(r, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"
-    )
-
-    def year_slice(y: int) -> DataFrame:
-        return orders.where(F.year("o_orderdate") == y).withColumn(
-            "mk", F.year("o_orderdate") * 100 + F.month("o_orderdate")
-        )
-
+    ra = fresh_scratch("saas_lake_optbkt_96", sf_dir)
+    rb = fresh_scratch("saas_lake_optbkt_97", sf_dir)
+    orders = orders_frame(spark, sf_dir, "o_orderdate")
     # H1 slices: 6 partitions per fact — certificate-sized (every
     # lifecycle leg still exercises: deletes hit all months, the
     # resubscribe overwrites 199606, OPTIMIZE rewrites every tombstoned
     # partition); 12 months double the publish/fsync/rewrite cost for
     # no extra coverage
-    a = year_slice(1996).where(F.col("mk") <= 199606)
-    b = year_slice(1997).where(F.col("mk") <= 199706)
-    P.publish_partition_overwrite(
-        spark, a, ra, "mk", bucket_col="o_custkey", n_buckets=4
-    )
-    P.publish_partition_overwrite(
-        spark, b, rb, "mk", bucket_col="o_custkey", n_buckets=4
-    )
+    a, b = first_half(orders, 1996), first_half(orders, 1997)
+    publish_custkey_buckets(spark, a, ra, 4)
+    publish_custkey_buckets(spark, b, rb, 4)
     # GDPR: drop every %OB_MOD customer (tombstone register, no rewrite)
     P.publish_deletes(
         spark,
@@ -2888,51 +2664,26 @@ def optimize_bucketed_frames(
     # resubscribe: June is overwritten with the victims back at 4x
     # prices (exact in binary) — carried months now hold STALE victim
     # rows, so the global register downgrades to file-scoped tombstones
-    revised = a.where(F.col("mk") == 199606).withColumn(
-        "o_totalprice",
-        F.when(
-            F.col("o_custkey") % OB_MOD == 0, F.col("o_totalprice") * 4
-        ).otherwise(F.col("o_totalprice")),
-    )
-    P.publish_partition_overwrite(
-        spark, revised, ra, "mk", bucket_col="o_custkey", n_buckets=4
-    )
+    revised = scale_victim_prices(a.where(F.col("mk") == 199606), OB_MOD, 4)
+    publish_custkey_buckets(spark, revised, ra, 4)
 
     def rollup(phase: str) -> DataFrame:
         m = P.current_manifest(ra)
         ta = P.read_bucketed_partitioned(spark, ra, f"ob96_{tag}")
         tb = P.read_bucketed_partitioned(spark, rb, f"ob97_{tag}")
-
-        def per_cust(t: DataFrame, out: str) -> DataFrame:
-            return t.groupBy("o_custkey").agg(
-                F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias(out)
-            )
-
-        return (
-            per_cust(ta, "rev96")
-            .join(per_cust(tb, "rev97"), "o_custkey")
-            .groupBy((F.col("o_custkey") % 7).alias("cg"))
-            .agg(
-                F.count("*").alias("n_cust"),
-                F.sum("rev96").cast("double").alias("rev96"),
-                F.sum("rev97").cast("double").alias("rev97"),
-            )
-            .select(
-                F.lit(phase).alias("phase"),
-                F.lit(int(m["seq"])).cast("long").alias("seq_96"),
-                # one combined flag: the GLOBAL register is guaranteed
-                # at every sf (victims always exist); whether the
-                # resubscribe also forms a SCOPED group depends on which
-                # victims have June orders — data-dependent across sf,
-                # so the scoped/global split is certified by
-                # q_delete_vectors, not re-pinned here
-                F.lit(
-                    int(bool(m.get("deletes") or m.get("scoped_deletes")))
-                )
-                .cast("int")
-                .alias("has_registers"),
-                "*",
-            )
+        return cust_group_rollup(ta, tb).select(
+            F.lit(phase).alias("phase"),
+            F.lit(int(m["seq"])).cast("long").alias("seq_96"),
+            # one combined flag: the GLOBAL register is guaranteed at
+            # every sf (victims always exist); whether the resubscribe
+            # also forms a SCOPED group depends on which victims have
+            # June orders — data-dependent across sf, so the
+            # scoped/global split is certified by q_delete_vectors, not
+            # re-pinned here
+            F.lit(int(bool(m.get("deletes") or m.get("scoped_deletes"))))
+            .cast("int")
+            .alias("has_registers"),
+            "*",
         )
 
     p1 = rollup("p1_registers").localCheckpoint(eager=True)
@@ -3009,21 +2760,13 @@ def q_optimize_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ref: the reference relies on BigQuery's server-side clustering
     maintenance (README.md:90-91); this is the lake-side equivalent
     under the publish protocol."""
-    conf = "spark.sql.autoBroadcastJoinThreshold"
-    prev = spark.conf.get(conf, None)
-    spark.conf.set(conf, "-1")  # the 100 TB fact-fact regime
-    try:
+    with scoped_confs(spark, _NO_BROADCAST):
         p1, p2 = optimize_bucketed_frames(spark, sf_dir)
         return (
             p1.unionByName(p2)
             .orderBy("phase", "cg")
             .localCheckpoint(eager=True)
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, prev)
 
 
 # ---------------------------------------------------------------------------
@@ -3100,35 +2843,14 @@ def q_catalog_bucketed_partitioned(
     loaded one at a time (README.md:90-91,
     data_gen/generate_and_load_script.py) — consistency window
     included; this is the lake-side fix."""
-    import shutil
-
-    from saas_analytics_pipeline_spark.plans import publish as P
-
     tag = sf_tag(sf_dir)
-    cat = scratch_path("saas_lake_cat_bktp", sf_dir)
-    shutil.rmtree(cat, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"
-    )
-
-    def year_slice(y: int) -> DataFrame:
-        return orders.where(F.year("o_orderdate") == y).withColumn(
-            "mk", F.year("o_orderdate") * 100 + F.month("o_orderdate")
-        )
-
+    cat = fresh_scratch("saas_lake_cat_bktp", sf_dir)
+    orders = orders_frame(spark, sf_dir, "o_orderdate")
     # H1 slices: 6 partitions per fact — certificate-sized; the
     # atomicity/co-location/pruning story is month-count-independent
-    f96 = year_slice(1996).where(F.col("mk") <= 199606)
-    f97 = year_slice(1997).where(F.col("mk") <= 199706)
-    # dim staged under the JOIN key name so the bucket column IS the
-    # join column on every edge of the star
-    dim = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
-    )
-    conf = "spark.sql.autoBroadcastJoinThreshold"
-    prev = spark.conf.get(conf, None)
-    spark.conf.set(conf, "-1")  # the 100 TB fact-fact regime
-    try:
+    f96, f97 = first_half(orders, 1996), first_half(orders, 1997)
+    dim = segment_dim(spark, sf_dir)
+    with scoped_confs(spark, _NO_BROADCAST):
         P.publish_tables(
             spark,
             {"f96": f96, "f97": f97, "dim": dim},
@@ -3153,18 +2875,10 @@ def q_catalog_bucketed_partitioned(
                 os.path.join(cat, "tables", "f96"), rec["tables"]["f96"]
             )["partitions"]
         )
-
-        def per_cust(t: DataFrame, out: str) -> DataFrame:
-            return t.groupBy("o_custkey").agg(
-                F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias(out)
-            )
-
-        june = per_cust(
-            t96.where(F.col("_p") == "199606"), "rev96j"
-        )
+        june = per_cust_revenue(t96.where(F.col("_p") == "199606"), "rev96j")
         return (
-            per_cust(t96, "rev96")
-            .join(per_cust(t97, "rev97"), "o_custkey")
+            per_cust_revenue(t96, "rev96")
+            .join(per_cust_revenue(t97, "rev97"), "o_custkey")
             .join(td, "o_custkey")
             .join(june, "o_custkey", "left")
             .groupBy("c_mktsegment")
@@ -3192,11 +2906,6 @@ def q_catalog_bucketed_partitioned(
             .orderBy("c_mktsegment")
             .localCheckpoint(eager=True)
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, prev)
 
 
 # ---------------------------------------------------------------------------
@@ -3266,30 +2975,11 @@ def q_catalog_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
     GDPR state — the exact consistency gap the reference's
     table-at-a-time BigQuery loads accept
     (data_gen/generate_and_load_script.py)."""
-    import shutil
-
-    from saas_analytics_pipeline_spark.plans import publish as P
-
     tag = sf_tag(sf_dir)
-    cat = scratch_path("saas_lake_cat_incr", sf_dir)
-    shutil.rmtree(cat, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"
-    )
-    fact = (
-        orders.where(F.year("o_orderdate") == 1996)
-        .withColumn(
-            "mk", F.year("o_orderdate") * 100 + F.month("o_orderdate")
-        )
-        .where(F.col("mk") <= 199606)
-    )
-    dim = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
-    )
-    conf = "spark.sql.autoBroadcastJoinThreshold"
-    prev = spark.conf.get(conf, None)
-    spark.conf.set(conf, "-1")  # the 100 TB fact-fact regime
-    try:
+    cat = fresh_scratch("saas_lake_cat_incr", sf_dir)
+    fact = first_half(orders_frame(spark, sf_dir, "o_orderdate"), 1996)
+    dim = segment_dim(spark, sf_dir)
+    with scoped_confs(spark, _NO_BROADCAST):
         P.publish_tables(
             spark,
             {"fact": fact, "dim": dim},
@@ -3319,9 +3009,7 @@ def q_catalog_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .groupBy("c_mktsegment")
                 .agg(
                     F.count("*").alias("n_orders"),
-                    F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-                    .cast("double")
-                    .alias("total"),
+                    money_sum("o_totalprice", "total"),
                 )
                 .select(
                     F.lit(phase).alias("phase"),
@@ -3331,12 +3019,7 @@ def q_catalog_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
         p1 = rollup("p1_deleted").localCheckpoint(eager=True)
-        inc = fact.where(F.col("mk") == 199603).withColumn(
-            "o_totalprice",
-            F.when(
-                F.col("o_custkey") % CI_MOD == 0, F.col("o_totalprice") * 2
-            ).otherwise(F.col("o_totalprice")),
-        )
+        inc = scale_victim_prices(fact.where(F.col("mk") == 199603), CI_MOD, 2)
         P.publish_catalog_increments(spark, cat, {"fact": inc})
         p2 = rollup("p2_resubscribed")
         return (
@@ -3344,11 +3027,6 @@ def q_catalog_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("phase", "c_mktsegment")
             .localCheckpoint(eager=True)
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, prev)
 
 
 # ---------------------------------------------------------------------------
@@ -3438,18 +3116,8 @@ def q_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ref: Delta deletion vectors / Iceberg positional deletes; the
     reference's BigQuery DML rewrites whole partitions (README.md:82) —
     this is the lake-side O(keys) equivalent."""
-    import shutil
-
-    from saas_analytics_pipeline_spark.plans import publish as P
-
-    root = scratch_path("saas_lake_dv", sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"
-    )
-    o96 = orders.where(F.year("o_orderdate") == 1996).withColumn(
-        "mk", F.year("o_orderdate") * 100 + F.month("o_orderdate")
-    )
+    root = fresh_scratch("saas_lake_dv", sf_dir)
+    o96 = year_slice(orders_frame(spark, sf_dir, "o_orderdate"), 1996)
     P.publish_partition_overwrite(spark, o96, root, "mk")
     victims = (
         o96.where(F.col("o_custkey") % DV_MOD == 0)
@@ -3473,9 +3141,7 @@ def q_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
             P.read_current(spark, root)
             .agg(
                 F.count("*").alias("n_rows"),
-                F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-                .cast("double")
-                .alias("revenue"),
+                money_sum("o_totalprice", "revenue"),
             )
             .select(
                 F.lit(tag).alias("phase"),
@@ -3488,13 +3154,7 @@ def q_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     p1 = phase("p1_gdpr")
-    june = o96.where(F.col("mk") == 199606)
-    resub = june.withColumn(
-        "o_totalprice",
-        F.when(
-            F.col("o_custkey") % DV_MOD == 0, F.col("o_totalprice") * 2
-        ).otherwise(F.col("o_totalprice")),
-    )
+    resub = scale_victim_prices(o96.where(F.col("mk") == 199606), DV_MOD, 2)
     P.publish_partition_overwrite(spark, resub, root, "mk")
     p2 = phase("p2_resubscribe")
     P.optimize_table(spark, root)
@@ -3589,20 +3249,13 @@ def q_predicate_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ref: the reference leans on BigQuery's partition+cluster routing
     (README.md:90-91); this is the lake-side equivalent, explicit and
     certified."""
-    import datetime
-    import shutil
-    from functools import reduce
-
-    from saas_analytics_pipeline_spark.plans import publish as P
-
-    root = scratch_path("saas_lake_routing", sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch("saas_lake_routing", sf_dir)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate"
     )
-    monthly = orders.where(
-        F.year("o_orderdate").between(1996, 1997)
-    ).withColumn("mk", F.year("o_orderdate") * 100 + F.month("o_orderdate"))
+    monthly = with_month_key(
+        orders.where(F.year("o_orderdate").between(1996, 1997))
+    )
     P.publish_partition_overwrite(
         spark, monthly.repartition(F.col("mk")), root, "mk"
     )
@@ -3617,10 +3270,7 @@ def q_predicate_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     d4, rep4 = P.read_where(spark, root, "o_custkey", 100, 500)
 
     def phase(df: DataFrame, name: str, route: str, files: int) -> DataFrame:
-        return df.agg(
-            F.count("*").alias("n_rows"),
-            F.sum("o_custkey").cast("long").alias("sum_custkey"),
-        ).select(
+        return df.agg(*custkey_checksum()).select(
             F.lit(name).alias("phase"),
             F.lit(route).alias("route"),
             F.lit(files).cast("long").alias("files_scanned"),
@@ -3637,7 +3287,7 @@ def q_predicate_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         phase(d4, "r4_full", rep4["route"], rep4["files"]),
     ]
-    return reduce(lambda a, b: a.unionByName(b), parts).orderBy("phase")
+    return reduce(DataFrame.unionByName, parts).orderBy("phase")
 
 
 # ---------------------------------------------------------------------------
@@ -3720,12 +3370,7 @@ def q_catalog_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Ref: the reference maintains each BigQuery table independently and
     accepts the window (README.md:82); this closes it."""
-    import shutil
-
-    from saas_analytics_pipeline_spark.plans import publish as P
-
-    cat = scratch_path("saas_lake_catmaint", sf_dir)
-    shutil.rmtree(cat, ignore_errors=True)
+    cat = fresh_scratch("saas_lake_catmaint", sf_dir)
     orders = load_table(spark, sf_dir, "orders")
     fact = orders.select(
         F.col("o_orderkey").alias("k"),
@@ -3739,21 +3384,11 @@ def q_catalog_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is exactly ceil(n / cap), the arithmetic the oracle reproduces from
     # its own COUNT(*) (one cap for both tables keeps the publish a
     # single atomic commit: one txid generation at p1)
-    import math
-
     cap = math.ceil(dim.count() / CM_DIM_FILES)
-    conf_key = "spark.sql.files.maxRecordsPerFile"
-    prev_conf = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, str(cap))
-    try:
+    with scoped_confs(spark, {"spark.sql.files.maxRecordsPerFile": str(cap)}):
         P.publish_tables(
             spark, {"fact": fact.coalesce(1), "dim": dim.coalesce(1)}, cat
         )
-    finally:
-        if prev_conf is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev_conf)
 
     def phase(tag: str, seq: int) -> DataFrame:
         rec = P.catalog_record(cat, seq=seq)
@@ -3839,46 +3474,31 @@ def q_stream_lake_maint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Ref: the reference's incremental daily loads (README.md:82) with
     BigQuery's implicit auto-compaction made explicit and certified."""
-    import shutil
-
-    from saas_analytics_pipeline_spark.plans import publish as P
     from saas_analytics_pipeline_spark.streaming.jobs import (
         LAKE_AFTER_INCREMENT,
         lake_apply_batch,
     )
 
-    root = scratch_path("saas_lake_streammaint", sf_dir)
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh_scratch("saas_lake_streammaint", sf_dir)
     marker_dir = os.path.join(root, "_markers")
     os.makedirs(marker_dir, exist_ok=True)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate"
     )
-    monthly = orders.where(
-        (F.year("o_orderdate") == 1996) & (F.month("o_orderdate") <= 3)
-    ).withColumn("mk", F.year("o_orderdate") * 100 + F.month("o_orderdate"))
-
-    class _Boom(RuntimeError):
-        pass
-
-    def die(barrier: str) -> None:
-        if barrier == LAKE_AFTER_INCREMENT:
-            raise _Boom(barrier)
-
+    monthly = with_month_key(
+        orders.where(
+            (F.year("o_orderdate") == 1996) & (F.month("o_orderdate") <= 3)
+        )
+    )
     for i, mk in enumerate((199601, 199602, 199603)):
         inc = monthly.where(F.col("mk") == mk).repartition(4)
-        if i == 1:  # the crash-then-replay batch
-            try:
-                lake_apply_batch(
-                    inc, i, root, "mk", marker_dir, maintain_every=3,
-                    stats_cols=["o_custkey"], crash_hook=die,
-                )
-            except _Boom:
-                pass
-        lake_apply_batch(
-            inc, i, root, "mk", marker_dir, maintain_every=3,
-            stats_cols=["o_custkey"],
+        apply = partial(
+            lake_apply_batch, inc, i, root, "mk", marker_dir,
+            maintain_every=3, stats_cols=["o_custkey"],
         )
+        if i == 1:  # the crash-then-replay batch
+            crash_at(LAKE_AFTER_INCREMENT, apply)
+        apply()
     m = P.current_manifest(root)
     files_df = spark.createDataFrame(
         [(v, len(fs)) for v, fs in sorted(m["partitions"].items())],
@@ -3972,16 +3592,7 @@ def q_catalog_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats live in the named manifest; a routed read opens the
     overlapping files of ONE consistent snapshot set, no directory
     listing, no footer for skipped files."""
-    import datetime
-    import shutil
-    from functools import reduce
-
-    from pyspark.sql import Window
-
-    from saas_analytics_pipeline_spark.plans import publish as P
-
-    cat = scratch_path("saas_lake_catrouting", sf_dir)
-    shutil.rmtree(cat, ignore_errors=True)
+    cat = fresh_scratch("saas_lake_catrouting", sf_dir)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate"
     )
@@ -4017,10 +3628,7 @@ def q_catalog_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def phase(df: DataFrame, name: str, rep: dict) -> DataFrame:
-        return df.agg(
-            F.count("*").alias("n_rows"),
-            F.sum("o_custkey").cast("long").alias("sum_custkey"),
-        ).select(
+        return df.agg(*custkey_checksum()).select(
             F.lit(name).alias("phase"),
             F.lit("+".join(r["route"] for r in rep["routes"])).alias("route"),
             F.lit(rep["files"]).cast("long").alias("files_scanned"),
@@ -4032,4 +3640,4 @@ def q_catalog_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
         phase(d2, "r2_full", rep2),
         phase(d3, "r3_compound", rep3),
     ]
-    return reduce(lambda a, b: a.unionByName(b), parts).orderBy("phase")
+    return reduce(DataFrame.unionByName, parts).orderBy("phase")

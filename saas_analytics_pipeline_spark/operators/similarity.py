@@ -1193,9 +1193,8 @@ def q_ann_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     lifetime (the production IVF lifecycle, crash matrix in
     tests/test_streaming.py)."""
     import os
-    import shutil
 
-    from saas_analytics_pipeline_spark.scratch import scratch_path
+    from saas_analytics_pipeline_spark.scratch import fresh_scratch
     from saas_analytics_pipeline_spark.streaming.jobs import (
         ann_apply_batch,
         ann_live_cells,
@@ -1205,8 +1204,7 @@ def q_ann_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.where(F.col("vec_id") % IVF_BATCH_MOD != 0)
     batch = emb.where(F.col("vec_id") % IVF_BATCH_MOD == 0)
     anchors = pinned_anchors(corpus)
-    state = scratch_path("saas_ann_maint", sf_dir)
-    shutil.rmtree(state, ignore_errors=True)
+    state = fresh_scratch("saas_ann_maint", sf_dir)
     corpus_cells = os.path.join(state, "corpus_cells")
     assign_cells(corpus, anchors).select(
         "vec_id", "anchor_id", "acos"

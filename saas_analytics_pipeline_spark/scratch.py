@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import os
 import re
+import shutil
 import tempfile
 
 
@@ -90,3 +91,14 @@ def scratch_path(name: str, sf_dir: str | None = None) -> str:
     _check_base(base, explicit="SPARK_GRAFT_SCRATCH" in os.environ)
     tag = f"{safe_tag(name)}_{sf_tag(sf_dir)}" if sf_dir else safe_tag(name)
     return os.path.join(base, tag)
+
+
+def fresh_scratch(name: str, sf_dir: str) -> str:
+    """``scratch_path(name, sf_dir)`` emptied of whatever an earlier run
+    left there: the fresh-lineage prologue of every key that rebuilds its
+    state from nothing. The ownership and permission check on the base is
+    scratch_path's, so a squatted base still raises before anything is
+    removed."""
+    path = scratch_path(name, sf_dir)
+    shutil.rmtree(path, ignore_errors=True)
+    return path

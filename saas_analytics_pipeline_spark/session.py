@@ -20,6 +20,8 @@ coalescing is on) and executor sizing change — see docs/SCALE.md.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -71,3 +73,24 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
     )
     return builder.getOrCreate()
+
+
+@contextmanager
+def scoped_confs(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set ``confs`` on the session for the body of the ``with``, then put
+    every key back exactly as it was — the previous value, or unset if it
+    had none — on return and when the body raises. The planning-regime
+    certificates (forced bucket SMJ, bloom injection, file-size caps,
+    timestamp encoding) use this so a later query in the same session
+    keeps its own planning and write behaviour."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

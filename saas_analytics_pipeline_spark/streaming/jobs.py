@@ -812,13 +812,10 @@ def q_stream_mart_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     files; days untouched by a batch carry over in the manifest by
     reference. The mart is |days x event_types| rows regardless of
     event volume, and the commit is crash-atomic."""
-    import shutil
-
     from saas_analytics_pipeline_spark.plans import publish as P
-    from saas_analytics_pipeline_spark.scratch import scratch_path
+    from saas_analytics_pipeline_spark.scratch import fresh_scratch
 
-    target = scratch_path("saas_stream_mart", sf_dir)
-    shutil.rmtree(target, ignore_errors=True)
+    target = fresh_scratch("saas_stream_mart", sf_dir)
     ev = load_table(spark, sf_dir, "events")
     for i in range(3):
         upsert_daily_event_counts(
@@ -1422,14 +1419,12 @@ def q_stream_catalog_increment(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch's derive returns — and a crash anywhere leaves readers on
     the previous consistent record."""
     import os
-    import shutil
 
     from saas_analytics_pipeline_spark.plans import publish as P
-    from saas_analytics_pipeline_spark.scratch import scratch_path
+    from saas_analytics_pipeline_spark.scratch import fresh_scratch
 
-    cat = scratch_path("saas_stream_cat_incr", sf_dir)
+    cat = fresh_scratch("saas_stream_cat_incr", sf_dir)
     marker_dir = os.path.join(cat, "_markers")
-    shutil.rmtree(cat, ignore_errors=True)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"
     )

@@ -260,3 +260,63 @@ def test_merge_upsert_applies_latest_version_and_inserts(spark, sf_dir):
         assert rows[b].n_rows == src[b].n  # no row lost or duplicated
         expected = src[b].s + (src[b].n * UPSERT_BUMP if b in (0, 5) else 0)
         assert rows[b].sum_custkey == expected, f"bucket {b}"
+
+
+def test_crash_at_catches_only_its_own_crash():
+    """crash_at kills the write at the named barrier and nowhere else; a
+    real failure of the write (a commit conflict, a RuntimeError
+    subclass) propagates instead of passing for the crash, and a write
+    that never reaches the barrier fails the certificate."""
+    from saas_analytics_pipeline_spark.operators.lake import crash_at
+    from saas_analytics_pipeline_spark.plans.publish import (
+        AFTER_DATA,
+        AFTER_MANIFEST,
+        CommitConflictError,
+    )
+
+    reached = []
+
+    def write(crash_hook):
+        for barrier in (AFTER_DATA, AFTER_MANIFEST):
+            crash_hook(barrier)
+            reached.append(barrier)
+
+    crash_at(AFTER_MANIFEST, write)
+    assert reached == [AFTER_DATA]  # killed at the manifest barrier
+
+    def conflicted(crash_hook):
+        crash_hook(AFTER_DATA)
+        raise CommitConflictError("another publisher committed first")
+
+    with pytest.raises(CommitConflictError):
+        crash_at(AFTER_MANIFEST, conflicted)
+
+    with pytest.raises(RuntimeError, match="never reached") as exc:
+        crash_at("staged:dim", write)
+    assert not isinstance(exc.value, CommitConflictError)
+
+
+def test_scoped_confs_restores_set_and_unset_keys(spark):
+    """A conf that had a value gets it back and a conf that had none is
+    unset again, both on normal return and when the body raises."""
+    from saas_analytics_pipeline_spark.session import scoped_confs
+
+    was_set, was_unset = "spark.graft.test.was_set", "spark.graft.test.was_unset"
+    spark.conf.set(was_set, "before")
+    spark.conf.unset(was_unset)
+    inside = {was_set: "inside", was_unset: "inside"}
+    try:
+        with scoped_confs(spark, inside):
+            assert spark.conf.get(was_set) == "inside"
+            assert spark.conf.get(was_unset) == "inside"
+        assert spark.conf.get(was_set) == "before"
+        assert spark.conf.get(was_unset, None) is None
+
+        with pytest.raises(ZeroDivisionError):
+            with scoped_confs(spark, inside):
+                assert spark.conf.get(was_unset) == "inside"
+                1 / 0
+        assert spark.conf.get(was_set) == "before"
+        assert spark.conf.get(was_unset, None) is None
+    finally:
+        spark.conf.unset(was_set)

@@ -2432,6 +2432,16 @@ def test_scoped_deletes_plan_size_constant_in_group_count(spark, root, tmp_path)
         for r in (root, root3)
     ]
     assert njoins[0] == njoins[1], njoins
+    # one tombstone scan for every group's key files, not one per group
+    nscans = [
+        P.read_current(spark, r)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+        .count("FileScan")
+        for r in (root, root3)
+    ]
+    assert nscans[0] == nscans[1], nscans
 
 
 def test_scoped_group_valve_caps_reader_plan_growth(spark, root, backend):

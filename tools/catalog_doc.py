@@ -26,7 +26,8 @@ def first_sentence(doc: str) -> str:
     return text[:160] or "(no docstring)"
 
 
-def main() -> None:
+def render() -> str:
+    """The full text of docs/CATALOG.md for the catalog as registered now."""
     qcatalog.load_all()
     lines = [
         "# Query catalog index (generated by tools/catalog_doc.py)",
@@ -44,8 +45,12 @@ def main() -> None:
         oracle = "sql" if entry.oracle else "rows-only"
         what = first_sentence(entry.doc).replace("|", "\\|")
         lines.append(f"| `{name}` | {oracle} | {src}:{line} | {what} |")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
     out = ROOT / "docs" / "CATALOG.md"
-    out.write_text("\n".join(lines) + "\n")
+    out.write_text(render())
     print(f"wrote {out} ({len(qcatalog.QUERIES)} queries)")
 
 

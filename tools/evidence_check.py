@@ -1,6 +1,8 @@
 """Fast structural evidence check (verdict r11 "What's wrong" #1): the
-committed evidence records (docs/SCALE_LINT.md, docs/CATALOG.md) must
-cover exactly the CURRENT catalog's key count. Two consecutive rounds
+committed evidence records must match the CURRENT catalog:
+docs/SCALE_LINT.md its key count, docs/CATALOG.md exactly what
+tools/catalog_doc.py renders (every key's oracle status, file:line and
+first docstring sentence). Two consecutive rounds
 ended with evidence stamped one commit before a key registration
 (r10: PROBES two commits early; r11: q_catalog_routing landed after the
 regen commit, leaving SCALE_LINT at 306 keys vs 307 registered and a RED
@@ -8,11 +10,11 @@ test suite at judge time). The discipline fix is to make the violation
 loud AT COMMIT TIME, not at judge time:
 
   * this script is cheap (no SparkSession — it only imports the catalog
-    modules and regex-reads two doc headers), so it runs as a git
+    modules and reads the doc records), so it runs as a git
     pre-commit hook (installed by `python tools/evidence_check.py
     --install-hook`, re-run after a fresh clone);
-  * tests/test_evidence.py runs the same count checks in the suite, so
-    CI catches a bypassed hook.
+  * tests/test_evidence.py runs the same checks in the suite, so CI
+    catches a bypassed hook.
 
 Exit 0 = evidence matches the catalog; exit 1 = regenerate
 (tools/scale_lint.py + tools/catalog_doc.py) in the SAME commit that
@@ -50,12 +52,12 @@ def check() -> int:
             f"catalog has {n} — run: python tools/scale_lint.py"
         )
 
-    cat = (ROOT / "docs" / "CATALOG.md").read_text()
-    m = re.search(r"(\d+) registered queries;", cat)
-    if not m or int(m.group(1)) != n:
+    import catalog_doc  # a sibling in tools/, on sys.path as a script
+
+    if (ROOT / "docs" / "CATALOG.md").read_text() != catalog_doc.render():
         errs.append(
-            f"docs/CATALOG.md lists {m.group(1) if m else '???'} keys, "
-            f"catalog has {n} — run: python tools/catalog_doc.py"
+            "docs/CATALOG.md differs from the catalog (keys, locations or "
+            "first sentences) — run: python tools/catalog_doc.py"
         )
 
     # the bench-headline-coupled records: these are the ones that went
