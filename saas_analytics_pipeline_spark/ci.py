@@ -12,6 +12,13 @@ Gate contract:
 - source freshness must not be 'error'; 'warn' also fails under
   --warn-error semantics (the default here, matching the reference CI).
 
+The build runs first and serially; a failed build returns before any test
+runs. The test phase is then ONE concurrent wave under the caller's job
+group: both suites' checks go to a single `run_checks` call (every count on
+its own driver thread) while the freshness aggregate runs beside them, so
+the gate pays the scheduler's per-job launch latency about once instead of
+once per job (docs/SCALE.md, "Gate test phase").
+
 At 100 TB the same gate runs unchanged: every check is a lazy violation
 frame (hash-agg / anti-join), and only counts come back to the driver.
 """
@@ -22,6 +29,7 @@ import sys
 import tempfile
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 from saas_analytics_pipeline_spark.quality.checks import (
     freshness,
@@ -30,6 +38,7 @@ from saas_analytics_pipeline_spark.quality.checks import (
     standard_suite,
 )
 from saas_analytics_pipeline_spark.registry import REGISTRY
+from saas_analytics_pipeline_spark.session import run_concurrently
 from saas_analytics_pipeline_spark.sources import load_table, register_sources
 
 
@@ -55,14 +64,32 @@ def run_gate(
         lines.append(f"BUILD FAIL: {e}")
         return False, lines
 
-    # -- test phase: clean suites must be clean ----------------------------
-    for res in run_checks(standard_suite(spark, sf_dir)):
+    # -- test phase: one wave of both suites plus freshness ----------------
+    clean = standard_suite(spark, sf_dir)
+    dirty = known_dirty_suite(spark, sf_dir)
+    # the suites are merged into one dict: a shared name would drop a check
+    shared = sorted(clean.keys() & dirty.keys())
+    if shared:
+        raise ValueError(f"check names in both suites: {shared}")
+    # CI pins 'now' to the newest event: the gate checks WIRING (thresholds,
+    # statuses); staleness vs wall-clock is the orchestrator's call in
+    # production, not the test dataset's.
+    ev = load_table(spark, sf_dir, "events")
+    fresh_df = freshness(
+        ev, "ts", F.max("ts"), warn_after_hours=24, error_after_hours=72
+    )
+    results, fresh = run_concurrently(
+        spark, [lambda: run_checks({**clean, **dirty}), fresh_df.first]
+    )
+
+    # clean suites must be clean
+    for res in results[: len(clean)]:
         mark = "pass" if res.passed else "FAIL"
         lines.append(f"{mark} {res.name}: {res.violations} violations")
         ok &= res.passed
 
-    # -- known-dirty detectors must fire (adversarial-data sanity) ---------
-    for res in run_checks(known_dirty_suite(spark, sf_dir)):
+    # known-dirty detectors must fire (adversarial-data sanity)
+    for res in results[len(clean):]:
         fired = res.violations > 0
         mark = "pass" if fired else "FAIL"
         lines.append(
@@ -71,15 +98,7 @@ def run_gate(
         )
         ok &= fired
 
-    # -- freshness under --warn-error --------------------------------------
-    ev = load_table(spark, sf_dir, "events")
-    now = ev.agg({"ts": "max"}).first()[0]
-    # CI pins 'now' just after the newest event: the gate checks WIRING
-    # (thresholds, statuses); staleness vs wall-clock is the orchestrator's
-    # call in production, not the test dataset's.
-    fresh = freshness(
-        ev, "ts", str(now), warn_after_hours=24, error_after_hours=72
-    ).first()
+    # freshness under --warn-error
     bad = fresh["status"] == "error" or (warn_error and fresh["status"] == "warn")
     lines.append(
         f"{'FAIL' if bad else 'pass'} freshness events: status={fresh['status']} "

@@ -10,20 +10,26 @@ checks the reference lists at README.md:54-59.
 
 Scale notes: unique is one hash-agg on the key; relationships is a broadcast
 or shuffle anti-join; accepted_values/not_null are scan-local filters.
-Violation frames are lazy — a suite over N tables with M tests plans M
-independent jobs that share scans via the parquet cache, and at 100 TB you'd
-`.limit()` the violation samples rather than collecting them all.
+Violation frames are lazy, and `run_checks` evaluates a suite as ONE
+concurrent wave: every check's count runs on its own driver thread under
+the caller's job group and local properties (`session.run_concurrently`),
+so the scheduler interleaves the suite's small jobs across the executors
+instead of paying each job's launch latency in turn — dbt's test-phase
+`threads`, with the width set by the suite. Only counts come back to the
+driver; at 100 TB you'd `.limit()` the violation samples rather than
+collecting them all.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from saas_analytics_pipeline_spark.functions import hash60_sql, money
 from saas_analytics_pipeline_spark.qcatalog import query
+from saas_analytics_pipeline_spark.session import run_concurrently
 from saas_analytics_pipeline_spark.sources import TABLES, load_table
 
 
@@ -62,18 +68,22 @@ def accepted_values(df: DataFrame, col: str, values: list) -> DataFrame:
 def freshness(
     df: DataFrame,
     loaded_at: str,
-    now: str,
+    now: str | Column,
     warn_after_hours: int = 24,
     error_after_hours: int | None = None,
 ) -> DataFrame:
     """Source freshness: one row per status (dbt source freshness,
-    models/schema.yml:14). `now` is supplied (no wall-clock in queries).
+    models/schema.yml:14). `now` is supplied (no wall-clock in queries):
+    a timestamp string, or a Column evaluated in the same aggregate — the
+    CI gate passes ``F.max(loaded_at)`` to pin 'now' to the newest row in
+    one job instead of collecting it first.
 
     Two-level SLA, dbt semantics: age > error_after -> 'error',
     age > warn_after -> 'warn', else 'pass'. ``error_after_hours=None``
     keeps the single warn threshold."""
+    now_col = now if isinstance(now, Column) else F.lit(now)
     age_h = (
-        F.unix_timestamp(F.lit(now).cast("timestamp"))
+        F.unix_timestamp(now_col.cast("timestamp"))
         - F.unix_timestamp(F.max(loaded_at))
     ) / 3600.0
     status = F.when(
@@ -95,12 +105,13 @@ class CheckResult:
 
 
 def run_checks(checks: dict[str, DataFrame]) -> list[CheckResult]:
-    """Evaluate a named suite of violation frames (dbt build's test phase)."""
-    out = []
-    for name, df in checks.items():
-        n = df.count()
-        out.append(CheckResult(name, n, n == 0))
-    return out
+    """Evaluate a named suite of violation frames (dbt build's test phase)
+    as one concurrent wave; results come back in suite order."""
+    if not checks:
+        return []
+    spark = next(iter(checks.values())).sparkSession
+    counts = run_concurrently(spark, [df.count for df in checks.values()])
+    return [CheckResult(name, n, n == 0) for name, n in zip(checks, counts)]
 
 
 def standard_suite(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -20,6 +20,7 @@ DAG globally (often better than dbt's per-node serial execution,
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass, field
 from enum import Enum
@@ -167,8 +168,12 @@ def build_parallel(
     models are pure plan registration and run inline. TABLE writes go
     through the same atomic manifest/rename publish as the serial build
     (each model root has its own writer fence, so wave members never
-    contend)."""
+    contend). Each write is wrapped in ``inheritable_thread_target(spark)``
+    on the calling thread, so it runs under the caller's job group, local
+    properties and tags like the serial build's writes."""
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
 
     order = registry.topo_order()
     built: dict[str, DataFrame] = {}
@@ -210,8 +215,14 @@ def build_parallel(
             df.createOrReplaceTempView(name)
             built[name] = df
         if tables:
+            # one wrap per write: each clones the caller's properties for
+            # its own thread
+            writes = [
+                inheritable_thread_target(spark)(functools.partial(materialize, n))
+                for n in tables
+            ]
             with ThreadPoolExecutor(max_workers=max_workers) as pool:
-                for name, df in pool.map(materialize, tables):
+                for name, df in pool.map(lambda write: write(), writes):
                     df.createOrReplaceTempView(name)
                     built[name] = df
         remaining = [n for n in remaining if n not in built]

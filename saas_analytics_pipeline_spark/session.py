@@ -20,10 +20,15 @@ coalescing is on) and executor sizing change — see docs/SCALE.md.
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator, Sequence
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
+from typing import TypeVar
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -94,3 +99,24 @@ def scoped_confs(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def run_concurrently(spark: SparkSession, fns: Sequence[Callable[[], T]]) -> list[T]:
+    """Call every ``fn`` on its own driver thread, all at once, and return
+    their results in input order; an exception from any ``fn`` is re-raised
+    (the first in input order, once every thread has finished).
+
+    Every target is wrapped in ``inheritable_thread_target(spark)`` on the
+    calling thread, so the caller's job group, local properties and session
+    tags reach each thread's jobs: cancelling or attributing by group still
+    covers them. Each wrap clones the properties for its own thread — the
+    threads must not share one Properties object, since every SQL action
+    sets its execution id there. One thread per callable: the width of a
+    wave is its number of members, and Spark's scheduler interleaves their
+    tasks across the executors."""
+    if not fns:
+        return []
+    targets = [inheritable_thread_target(spark)(fn) for fn in fns]
+    with ThreadPoolExecutor(max_workers=len(targets)) as pool:
+        futures = [pool.submit(t) for t in targets]
+        return [f.result() for f in futures]

@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from saas_analytics_pipeline_spark.plans import publish as P
+from saas_analytics_pipeline_spark.session import scoped_confs
 
 
 class Boom(RuntimeError):
@@ -629,11 +630,8 @@ def test_delete_crash_leaves_old_state(spark, root, barrier):
 
 def test_optimize_binpacks_purges_and_keeps_history(spark, root):
     # fragment: 2 files per band via maxRecordsPerFile
-    spark.conf.set("spark.sql.files.maxRecordsPerFile", "20")
-    try:
+    with scoped_confs(spark, {"spark.sql.files.maxRecordsPerFile": "20"}):
         P.publish_partition_overwrite(spark, _banded(spark, 1), root, "band")
-    finally:
-        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
     P.publish_stats(spark, root, ["k"])
     P.publish_deletes(
         spark, spark.range(5).select(F.col("id").alias("k")), root, "k"
@@ -658,11 +656,8 @@ def test_optimize_binpacks_purges_and_keeps_history(spark, root):
 
 @pytest.mark.parametrize("barrier", [P.AFTER_DATA, P.AFTER_MANIFEST])
 def test_optimize_crash_leaves_old_state(spark, root, barrier):
-    spark.conf.set("spark.sql.files.maxRecordsPerFile", "20")
-    try:
+    with scoped_confs(spark, {"spark.sql.files.maxRecordsPerFile": "20"}):
         P.publish_partition_overwrite(spark, _banded(spark, 1), root, "band")
-    finally:
-        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
     before = P.current_manifest(root)
     with pytest.raises(Boom):
         P.optimize_table(spark, root, crash_hook=_crash_at(barrier))
@@ -866,11 +861,8 @@ def test_maintain_table_composes_and_is_idempotent(spark, root):
     """maintain_table = OPTIMIZE + incremental stats + vacuum in one
     call; the second run is metadata-only (nothing optimized, nothing
     scanned, nothing vacuumed) and the table reads identically."""
-    spark.conf.set("spark.sql.files.maxRecordsPerFile", "20")
-    try:
+    with scoped_confs(spark, {"spark.sql.files.maxRecordsPerFile": "20"}):
         P.publish_partition_overwrite(spark, _banded(spark, 1), root, "band")
-    finally:
-        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
     P.publish_deletes(
         spark, spark.range(5).select(F.col("id").alias("k")), root, "k"
     )
@@ -1116,11 +1108,8 @@ def test_vacuumed_catalog_replay_never_regresses(spark, cat, backend):
 
 
 def test_read_where_routes_and_matches_full_scan(spark, root):
-    spark.conf.set("spark.sql.files.maxRecordsPerFile", "20")
-    try:
+    with scoped_confs(spark, {"spark.sql.files.maxRecordsPerFile": "20"}):
         P.publish_partition_overwrite(spark, _banded(spark, 1), root, "band")
-    finally:
-        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
     P.publish_stats(spark, root, ["k"])
 
     def want(col, lo, hi):
@@ -1186,11 +1175,8 @@ def test_concurrent_optimize_and_auto_overwrite_no_manifest_collision(
     the parent chain stays acyclic."""
     if backend is P.LOCAL:
         pytest.skip("the fence serializes whole publishes on local")
-    spark.conf.set("spark.sql.files.maxRecordsPerFile", "20")
-    try:
+    with scoped_confs(spark, {"spark.sql.files.maxRecordsPerFile": "20"}):
         P.publish_partition_overwrite(spark, _banded(spark, 1), root, "band")
-    finally:
-        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
     band9 = _banded(spark, 7).where(F.col("band") == 0).withColumn(
         "band", F.lit(9)
     )
@@ -1550,10 +1536,7 @@ def test_read_bucketed_applies_tombstones_and_keeps_colocation(spark, root):
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.legacy.bucketedTableScan.outputOrdering": "true",
     }
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with scoped_confs(spark, confs):
         # the anti-join side must still broadcast: scope the threshold
         # override to the fact-fact SMJ only by re-reading under it
         ta2 = P.read_bucketed(spark, root, "tomb_a_" + os.path.basename(root))
@@ -1573,12 +1556,6 @@ def test_read_bucketed_applies_tombstones_and_keeps_colocation(spark, root):
         ), smj
         got = {(r["k"]): (r["v"], tuple()) for r in joined.collect()}
         assert set(got) == set(range(3, 100))
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 # ---------------------------------------------------------------------------
@@ -2137,9 +2114,7 @@ def test_bucketed_partitioned_join_zero_exchange_across_partitions(
     )
     ta = P.read_bucketed_partitioned(spark, root, "zx_a_" + os.path.basename(root))
     tb = P.read_bucketed_partitioned(spark, root2, "zx_b_" + os.path.basename(root))
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    with scoped_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         ga = ta.groupBy("k").agg(F.sum("v").alias("s96"))
         gb = tb.groupBy("k").agg(F.sum("v").alias("s97"))
         j = ga.join(gb, "k")
@@ -2149,8 +2124,6 @@ def test_bucketed_partitioned_join_zero_exchange_across_partitions(
         assert "Exchange hashpartitioning" not in plan, plan
         got = {r["k"]: (r["s96"], r["s97"]) for r in j.collect()}
         assert len(got) == 24
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
 
 
 def test_bucketed_partitioned_spec_is_a_table_invariant(spark, root):
@@ -2673,9 +2646,7 @@ def test_catalog_bucketed_fact_joins_zero_exchange(spark, cat, backend):
     assert _snap(P.read_catalog_table(spark, cat, "f96")) == _snap(fact96)
     with pytest.raises(ValueError, match="bucket spec"):
         P.read_catalog_bucketed(spark, cat, "dim", "cbd")
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    with scoped_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         def rev(t, out, col):
             return t.groupBy("ck").agg(F.sum(col).alias(out))
         j = rev(t96, "r96", "v96").join(rev(t97, "r97", "v97"), "ck")
@@ -2684,8 +2655,6 @@ def test_catalog_bucketed_fact_joins_zero_exchange(spark, cat, backend):
         assert plan.count("Bucketed: true") == 2, plan
         assert "Exchange hashpartitioning" not in plan, plan
         assert j.count() == 20
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
 
 
 def test_maintain_catalog_preserves_bucketed_table(spark, cat, backend):
@@ -2770,9 +2739,7 @@ def test_catalog_bucketed_partitioned_roundtrip_join_and_prune(
     # unbucketed or unpartitioned tables refuse loudly
     with pytest.raises(ValueError, match="partitioned\\+bucketed"):
         P.read_catalog_bucketed_partitioned(spark, cat, "dim", "cbpd")
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    with scoped_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
 
         def rev(t, out, col):
             return t.groupBy("ck").agg(F.sum(col).alias(out))
@@ -2784,8 +2751,6 @@ def test_catalog_bucketed_partitioned_roundtrip_join_and_prune(
         smj = plan[plan.index("SortMergeJoin"):]
         assert "Exchange hashpartitioning" not in smj, smj
         assert j.count() == 20
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
     # partition pruning on the shadow column reaches the scan
     pruned = t96.where(F.col("_p") == "199602")
     pplan = pruned._jdf.queryExecution().executedPlan().toString()

@@ -85,6 +85,42 @@ def test_parallel_build_matches_serial(spark, sf_dir, tmp_path):
         assert a == b, f"mismatch in {name}"
 
 
+def test_parallel_build_writes_run_under_the_callers_job_group(spark, tmp_path):
+    """The wave's TABLE writes run on pool threads, yet each lands in the
+    caller's job group, like the serial build's writes."""
+    from saas_analytics_pipeline_spark.registry import build_parallel
+
+    reg = ModelRegistry()
+
+    @reg.model("jg_src", layer="staging")
+    def jg_src(spark_, ref):
+        return spark_.range(30).select(F.col("id").alias("k"))
+
+    for i in (1, 2, 3):
+        reg.model(
+            f"jg_mart_{i}",
+            layer="marts",
+            materialization=Materialization.TABLE,
+            depends_on=("jg_src",),
+        )(lambda spark_, ref, i=i: ref("jg_src").where(F.col("k") % i == 0))
+
+    sc = spark.sparkContext
+    group = "parallel-build-job-group"
+    sc.setJobGroup(group, "build_parallel test")
+    try:
+        built = build_parallel(
+            reg, spark, warehouse_dir=str(tmp_path / "wh"), max_workers=2
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert built["jg_mart_3"].count() == 10
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    # VIEW models plan inline without a job: every job in the group comes
+    # from a pool thread's write, at least one per TABLE mart
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 3
+
+
 def test_driver_window_covers_survey_core():
     """The driver verifies only the first 50 queries() entries per round;
     pin that window to the SURVEY section-2 core + every CAST-fixed oracle
