@@ -1659,7 +1659,7 @@ def q_wordfreq_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# corpus snapshot diff (docs/ROADMAP_r07.md #4): the delta between two
+# corpus snapshot diff: the delta between two
 # dataset releases, by document key + content digest
 # --------------------------------------------------------------------------
 

@@ -339,7 +339,7 @@ def q_domain_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# model-based quality filter (docs/ROADMAP_r07.md #3): a trained linear
+# model-based quality filter: a trained linear
 # scorer applied at corpus scale without any ML runtime in the engine
 # --------------------------------------------------------------------------
 

@@ -766,6 +766,23 @@ def q_dedup_clusters_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def exact_text_pairs(h: DataFrame) -> DataFrame:
+    """(a, b) doc-id pairs, a < b, whose texts are identical, from a frame
+    of (doc_id, text, h, hl). The 12-byte (xxhash64, length) composite is
+    only the equi-join key (§2.3: narrower than hex md5); a residual
+    collision on it (E ~ n^2/2^65 for a bare 64-bit hash) must not emit a
+    wrong pair row, so the pair predicate also compares the texts."""
+    return (
+        h.alias("x")
+        .join(h.alias("y"), ["h", "hl"])
+        .where(
+            (F.col("x.doc_id") < F.col("y.doc_id"))
+            & (F.col("x.text") == F.col("y.text"))
+        )
+        .select(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
+    )
+
+
 @query(
     "q_crossmodal_dedup",
     oracle="""
@@ -800,22 +817,13 @@ def q_crossmodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")
 
-    # r13: xxhash64 over md5 — the hash only keys the exact-pair self-join
-    # (pair ids are the output), 8-byte join key instead of hex (§2.3).
-    # r14 (VERDICT r13 #4): widened to (xxhash64, length) — a bare 64-bit
-    # key admits birthday collisions at the 100 TB design point
-    # (E ~ n^2/2^65), and a collision HERE emits a wrong pair row as
-    # output. The 12-byte composite keeps the narrow-key win.
-    h = docs.select(
-        "doc_id",
-        F.xxhash64("text").alias("h"),
-        F.length("text").alias("hl"),
-    )
-    txt = (
-        h.alias("x")
-        .join(h.alias("y"), ["h", "hl"])
-        .where(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
+    txt = exact_text_pairs(
+        docs.select(
+            "doc_id",
+            "text",
+            F.xxhash64("text").alias("h"),
+            F.length("text").alias("hl"),
+        )
     )
 
     from saas_analytics_pipeline_spark.operators.similarity import (
@@ -1377,7 +1385,7 @@ def q_dedup_lsh_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Maximal exact-substring (token-window) duplication — the suffix-array
-# modality (r09, ROADMAP_r10 #6 pulled forward)
+# modality
 # ---------------------------------------------------------------------------
 
 RUN_W = 8  # exact-overlap window width in tokens (the "50-token" knob)

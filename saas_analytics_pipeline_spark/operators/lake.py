@@ -2603,7 +2603,7 @@ def q_bucket_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     full history of daily overwrites — reads co-located buckets with
     per-bucket partition-local Sorts and no Exchange. This closes the
     gap the whole-snapshot q_bucket_manifest left: a date-partitioned
-    fact no longer loses co-location (ROADMAP_r12 #3).
+    fact no longer loses co-location.
 
     Ref: the reference leans on BigQuery clustering within partitioned
     tables (README.md:90-91); this is the explicit lake-side twin."""
@@ -2754,8 +2754,8 @@ def q_optimize_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: between maintenance runs reads pay O(registers) broadcast
     anti-joins; OPTIMIZE bounds that debt by rewriting just the
     fragmented/tombstoned partitions (one co-located file per
-    partition-bucket), never the lake. This keys the maintenance leg
-    the r12 certificates left pytest-only (ROADMAP_r13 #2).
+    partition-bucket), never the lake. This puts the maintenance leg of
+    the bucketed-lake certificates under the driver's oracle check.
 
     Ref: the reference relies on BigQuery's server-side clustering
     maintenance (README.md:90-91); this is the lake-side equivalent
@@ -3110,8 +3110,8 @@ def q_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     one stats-narrowed candidate scan at overwrite time (tombstone-
     grain, never table-grain); readers pay one broadcast key-join plus
     one broadcast scope-file join per scoped group, and only on tables
-    that actually carry one. This closes ROADMAP_r12 #4: CDC/GDPR
-    resubscribe flows never see the optimize-first refusal.
+    that actually carry one. CDC/GDPR resubscribe flows therefore never
+    see the optimize-first refusal.
 
     Ref: Delta deletion vectors / Iceberg positional deletes; the
     reference's BigQuery DML rewrites whole partitions (README.md:82) —

@@ -1277,7 +1277,7 @@ def cell_drift_gauge(cells: DataFrame) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # drift-TRIGGERED partial refit: re-cluster only the worst cells
-# (docs/ROADMAP_r08.md #3 — the reaction to q_ivf_cell_drift's flag)
+# (the reaction to q_ivf_cell_drift's flag)
 # --------------------------------------------------------------------------
 REFIT_K = 3  # refit budget: cells re-clustered per maintenance cycle
 REFIT_SPLIT = 2  # sub-anchors a refitted cell splits into

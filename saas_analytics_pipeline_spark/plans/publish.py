@@ -833,8 +833,8 @@ def _reconcile_tombstones(
     ]
 
     def consolidate(groups: list[dict]) -> list[dict]:
-        """Merge scoped groups with IDENTICAL file sets (r12, the safe
-        subset of ROADMAP_r13 #3): (k∈T1 ∧ f∈S) ∨ (k∈T2 ∧ f∈S) is
+        """Merge scoped groups with IDENTICAL file sets (the only safe
+        merge): (k∈T1 ∧ f∈S) ∨ (k∈T2 ∧ f∈S) is
         (k∈T1∪T2) ∧ f∈S, so their tomb file lists concatenate — repeated
         resubscribes against the same carried candidates stop growing
         the reader's per-group join count. Groups with different scopes
@@ -2085,14 +2085,14 @@ def maintain_table(
     report["vacuumed_txids"] = vacuum(root, retain=retain)
     # parked bucketed entries whose data the vacuum just removed are
     # safe to drop (any lazy plan over them is already doomed) — keeps
-    # a long-lived service's session catalog bounded (ROADMAP_r14 #6)
+    # a long-lived service's session catalog bounded
     report["gc_entries"] = gc_bucketed_entries(spark, dangling_only=True)
     return report
 
 
 # ---------------------------------------------------------------------------
-# Multi-table atomic commit (r10): a CATALOG pointer over staged tables —
-# fact + dim become visible as ONE change (ROADMAP item pulled forward)
+# Multi-table atomic commit: a CATALOG pointer over staged tables —
+# fact + dim become visible as ONE change
 # ---------------------------------------------------------------------------
 #
 # Layout::
@@ -2390,7 +2390,7 @@ def publish_catalog_deletes(
     key_col: str,
     backend=LOCAL,
 ) -> str:
-    """Merge-on-read delete for a CATALOG table (r13, ROADMAP_r13 #4):
+    """Merge-on-read delete for a CATALOG table:
     commit the distinct ``key_col`` values as a tombstone appended to
     the table's staged manifest, made visible by ONE catalog-pointer
     swap — every catalog reader (read_catalog_table /
@@ -3019,7 +3019,7 @@ def read_catalog_bucketed(
     seq: int | None = None,
 ) -> DataFrame:
     """Read a BUCKETED catalog table through the committed catalog
-    record (r12, ROADMAP_r13 #5 pulled forward): visibility comes from
+    record: visibility comes from
     the record like read_catalog_table, the scan comes from the staged
     manifest's bucket spec like read_bucketed — a star schema whose fact
     is bucketed keeps both the one-swap consistency AND the
@@ -3327,6 +3327,6 @@ def maintain_catalog(
         "committed": committed,
         "vacuumed": vacuum_catalog(catalog_root, retain=retain),
         # post-vacuum: parked bucketed entries whose data just vanished
-        # are safe to drop (ROADMAP_r14 #6)
+        # are safe to drop, so the session catalog stays bounded
         "gc_entries": gc_bucketed_entries(spark, dangling_only=True),
     }

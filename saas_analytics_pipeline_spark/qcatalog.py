@@ -5,6 +5,11 @@ the :func:`query` decorator; ``__spark_entry__.queries()`` /
 ``oracle_sql()`` are thin views over this catalog. Keeping both halves in
 one place makes the column-name contract (Spark aliases == oracle aliases)
 reviewable side by side.
+
+Driver window: the driver verifies the first 50 keys of ``queries()`` each
+round, so :func:`ordered_keys` puts keys with no green
+``CORRECTNESS_r*.json`` row first, in registration order. The verified keys
+follow, oldest latest-green round first, ties in registration order.
 """
 
 from __future__ import annotations
@@ -41,509 +46,19 @@ def query(name: str, oracle: str | None = None) -> Callable[[SparkQuery], SparkQ
 
 
 # --------------------------------------------------------------------------
-# Driver-window ordering
-#
-# The driver verifies the FIRST 50 entries of queries() per round
-# (CORRECTNESS_r01.json == the first 50 registered keys). To accumulate
-# driver-verified coverage across rounds we (a) track which keys already
-# have a green CORRECTNESS row, (b) put not-yet-verified keys first, with
-# an explicit priority list covering the SURVEY section-2 core.
+# Driver-window ordering (the rule is stated in the module docstring)
 # --------------------------------------------------------------------------
 
-# Keys with a green row in CORRECTNESS_r01.json (hash_match=true), plus the
-# two no-oracle sketches whose rows-only check ran. Later rounds are folded
-# in automatically by scanning CORRECTNESS_r*.json (see _scan_correctness),
-# so the 50-entry window rotates to fresh keys each round without edits.
-DRIVER_VERIFIED: dict[str, str] = dict.fromkeys(
-    [
-        "q_revenue_daily", "q_running_rev", "q_rollup", "q_seasonality",
-        "q_distinct_count", "q_approx_distinct", "q_topn_orgs", "q_union_all",
-        "q_late_rate", "q_order_limit", "q_except", "q_cube", "q_pivot",
-        "q_percentiles", "q_approx_percentiles", "q_ntile", "q_trailing_7d",
-        "q_gap_fill", "q_percent_rank", "q_grouping_sets", "q_intersect",
-        "q_retention", "q_rfm", "q_funnel_windowed", "q_scalar_subquery",
-        "q_month_over_month", "q_new_vs_returning", "q_purchase_gaps",
-        "q_active_users", "q_histogram", "q_outliers", "q_decay_score",
-        "q_pareto", "q_basket_pairs", "q_heatmap", "q_anomaly_days",
-        "q_forecast_naive", "q_abandonment", "q_filter_eq", "q_filter_notnull",
-        "q_stg_cast", "q_soft_delete", "q_reject_rows", "q_dedup_latest",
-        "q_json_malformed", "q_null_rate",
-    ],
-    "r01",
-)
 
-# Round-7 window (the r06 window is fully verified — CORRECTNESS_r06 is
-# 48 hash-green + 2 rows-only — so its pins auto-drop via verified_keys).
-# r05/r06 discipline unchanged: every key below passed the DuckDB oracle
-# + selfcheck (--pandas and --vanilla) BEFORE entering this list; the
-# remaining slots auto-fill with the stalest certifications
-# (oldest-green-first rotation).
-WINDOW_PRIORITY: list[str] = [
-    # incremental ANN index maintenance (verdict r6 #3): assign-only
-    # batch ingest against the persisted pinned-anchor index + the
-    # per-cell drift gauge that triggers a refit
-    "q_similarity_ivf_incremental",
-    "q_ivf_cell_drift",
-    # HTML/boilerplate extraction — the crawl funnel's step zero
-    # (verdict r6 #5): synthesized markup stripped scan-side, oracle
-    # replays synthesis + extraction
-    "q_html_extract",
-    # BPE-fidelity token counts from the pinned merge-table seed
-    # (verdict r6 #6): real merges vs the regex proxy, fertility delta
-    "q_bpe_tokenize",
-    # skew-safe exact median over the Zipf domain key (verdict r6 #4):
-    # histogram two-stage, result identical to plain median
-    "q_domain_median",
-    # runtime bloom-filter semi-join reduction keyed (verdict r6 #7):
-    # hash row certifies the filter is semantically transparent; plan
-    # guard pins might_contain below the Exchange
-    "q_bloom_prejoin",
-    # second wave (docs/ROADMAP_r08.md #2-#3 pulled forward): the
-    # streaming half of incremental-ANN ingest (scan-side assignment to
-    # the frozen anchor literal + windowed per-cell rollup; live path
-    # ann_assign_stream driven by test_streaming) and the
-    # drift-triggered partial refit that completes the maintenance loop
-    # (budgeted re-cluster of the REFIT_K most-drifted cells only)
-    "q_stream_ann_assign",
-    "q_ivf_refit_partial",
-    # third wave: production shapes the catalog lacked — incremental
-    # AGGREGATE maintenance (merge late partials into a persisted mart,
-    # hash == full recompute), Misra-Gries heavy hitters (partition-local
-    # mergeable sketch + exact candidate recount — result provably
-    # layout-independent), iterative graph centrality (3-step weighted
-    # PageRank, exact-decimal contribution sums, unrolled-CTE oracle),
-    # and code-vs-prose routing (scan-local detector over synthesized
-    # mixed content)
-    "q_rollup_incremental",
-    "q_heavy_hitters",
-    "q_pagerank",
-    "q_code_detect",
-    # fourth wave: CDC apply with deletes (last-writer-wins by sequence,
-    # tombstones, broadcast key set so the snapshot never shuffles),
-    # bucketed co-located join as a keyed result-identity certificate
-    # (zero Exchanges below the join, plan-guarded), multi-format
-    # connector roundtrip (parquet/ORC/JSON/CSV each hash-checked
-    # against the source fingerprint), and the l-diversity privacy
-    # audit beside q_k_anonymity
-    "q_cdc_apply",
-    "q_bucket_join",
-    "q_format_roundtrip",
-    "q_l_diversity",
-    # fifth wave: dynamic partition pruning keyed (the star-schema scan
-    # killer — dynamicpruningexpression plan-guarded, result identity
-    # hash-certified) and referential-integrity-preserving
-    # pseudonymization (salted keyed hash on both FK sides; injectivity,
-    # join survival, and no-fixed-point certified in one row)
-    "q_dpp_prune",
-    "q_pseudonymize",
-    # the streaming mart-upsert merge keyed: three sequential
-    # micro-batch merges into the date-partitioned mart must equal the
-    # one-shot rollup (batching-independence), live foreachBatch path
-    # stays test-driven
-    "q_stream_mart_upsert",
-    # CSV malformed-row policy certificate (q_json_malformed's parser
-    # counterpart): PERMISSIVE quarantine column + DROPMALFORMED count
-    # hash-checked against the synthesis arithmetic
-    "q_csv_malformed",
-]
-
-# Round-8 window: every key below passed the DuckDB oracle + selfcheck
-# (--pandas and --vanilla) at sf0.001 AND sf0.01 before entering. Kept
-# deliberately small (verdict r07 #4) so the oldest-green-first rotation
-# re-certifies the stale r02 tail.
-WINDOW_PRIORITY += [
-    # convergence-checked iteration (verdict r07 #2): driver loop over a
-    # 1-row delta scalar, localCheckpoint cadence, recursive-CTE oracle
-    # that stops at the SAME iteration (n_iters is in the hash)
-    "q_pagerank_converged",
-    # dangling-mass redistribution (verdict r07 #7): sinks derived by
-    # anti-join, +dm/N recycling term as a 1-row broadcast aggregate
-    "q_pagerank_dangling",
-    # multi-pass BPE over the saturation-depth merge table (verdict r07
-    # #3): vocabulary-grain fixpoint loop, n_passes in the hash
-    "q_bpe_multipass",
-    # atomic manifest/rename publish (verdict r07 #5): crashed poisoned
-    # publish on disk, hash must equal the last committed snapshot
-    "q_atomic_publish",
-]
-
-# Round-9 window additions (same 3-mode certification bar).
-WINDOW_PRIORITY += [
-    # connected components under the convergence contract (verdict r08
-    # #5): loud failure past the cap, localCheckpoint cadence, and a
-    # recursive-CTE oracle replaying the per-round update so n_iters is
-    # in the hash
-    "q_dedup_clusters_converged",
-    # publish lifecycle (verdict r08 #2/#4): ensure_published replay
-    # after a mid-publish crash, stale-replay seq guard, retention
-    # vacuum — manifest/snapshot counts in the hash
-    "q_publish_lifecycle",
-    # the dbt-style DAG build through the registry's atomic TABLE
-    # publishes (verdict r08 #1): a poisoned rebuild crashed
-    # post-manifest must leave the committed mart bit-identical
-    "q_registry_build",
-    # snapshot time travel over the retained manifest lineage
-    # (ROADMAP_r10 #2 pulled forward): VERSION AS OF on plain parquet
-    "q_time_travel",
-    # manifest-side partition pruning (ROADMAP_r10 #4 pulled forward):
-    # a day-scoped read resolves to exactly its files, count in hash
-    "q_partition_pruned_read",
-    # maximal exact-substring spans (ROADMAP_r10 #6 pulled forward):
-    # the suffix-array dedup modality as hash inverted index + interval
-    # union; covered-token counts exact, window text never shuffles
-    "q_dup_spans",
-    # the wired ANN maintenance loop driver-certified (incl. the r09
-    # arrivals-into-cells compaction): ann_apply_batch over two
-    # micro-batches must gauge-hash identically to the one-shot batch
-    # assignment (q_ivf_cell_drift's byte-identical oracle)
-    "q_ann_maintenance",
-    # the APPLY step of exact-substring dedup: keep-first cut with a
-    # position-exact modular checksum of the removed tokens
-    "q_dup_spans_rewrite",
-    # SHOW HISTORY over the publish lineage: every retained version
-    # re-read through its manifest, crashed orphan invisible
-    "q_lake_history",
-    # incremental exact-substring detection: new docs probe the
-    # persisted corpus window-hash index (new-vs-corpus contract);
-    # streaming twin batching-independence pinned by test_streaming
-    "q_dup_spans_incremental",
-]
-
-# Round-10 window additions (same 3-mode certification bar; pins kept
-# to TWO so the 50-slot window clears the r03 tail and most of r04 —
-# verdict r09 #2).
-WINDOW_PRIORITY += [
-    # object-store contention certificate (verdict r09 #3/#4): the
-    # conditional-PUT backend end to end — disjoint-partition writers
-    # both commit (CAS loser re-merges), overlapping writers fail
-    # loudly (touched-partition drift), lineage seq in the hash
-    "q_publish_contention",
-    # the vacuumed-replay guard (ADVICE r09): a replay older than the
-    # retention window is recognized via the durable _APPLIED ledger
-    # instead of re-committing a stale frame; ledger count in the hash
-    "q_replay_horizon",
-    # table-format maintenance (r10, same 3-mode certification bar):
-    # per-file min/max stats + manifest-side FILE skipping over a
-    # clustered layout whose partition value is an opaque bucket id
-    # (the non-partition-column case partition pruning can't serve)
-    "q_stats_skipping",
-    # OPTIMIZE bin-packing as an atomic commit: fragmented months
-    # (maxRecordsPerFile, oracle-replayable counts) packed to one file
-    # each; pre-optimize snapshot re-read through its manifest
-    "q_optimize_compact",
-    # merge-on-read deletes + physical purge: tombstone commits hide
-    # keys instantly, optimize purges them, time travel stays
-    # snapshot-scoped — the GDPR shape at 100 TB
-    "q_mor_delete",
-    # schema-in-log evolution: a later increment's added column reaches
-    # the manifest's schema record; readers apply it (old files
-    # null-backfill, zero footer merging); type conflicts fail before
-    # any data write — fixes the silent column drop mixed-schema
-    # manifests had under inferred reads
-    "q_schema_evolution_lake",
-    # multi-table atomic commit (ROADMAP_r11 #2 pulled forward): fact +
-    # dim staged then made visible by ONE catalog-pointer swap; a crash
-    # after staging some tables leaves readers on the previous
-    # consistent set; same-txid retry converges; catalog time travel
-    "q_txn_commit",
-]
-
-# Round-11 window additions (same 3-mode certification bar: DuckDB
-# oracle + selfcheck --pandas and --vanilla at sf0.001 AND sf0.01 before
-# entering). Pins kept to TWO so the 50-slot window clears the whole r04
-# staleness tail (verdict r10 #1) alongside the r11 REVERIFY floors.
-WINDOW_PRIORITY += [
-    # bucketed manifest tables (verdict r10 #4): the bucket spec recorded
-    # at publish survives the protocol; two matching-spec tables join
-    # with zero Exchanges AND zero Sorts below the SMJ (plan-pinned),
-    # hash row identical to the plain join
-    "q_bucket_manifest",
-    # predicate-routed reads certified (verdict r10 #3): partition route,
-    # stats route, compound AND (intersected file lists), full-scan
-    # fallback — route names + files-scanned counts in the hash
-    "q_predicate_routing",
-    # catalog-unit maintenance (verdict r10 #5): fact+dim compaction +
-    # stats as ONE atomic catalog commit — per-table file counts, the
-    # single-seq advance, and the one-generation invariant in the hash
-    "q_catalog_maintain",
-    # streaming lake maintenance (verdict r10 #6): fragmented month
-    # increments through the foreachBatch body with a crash + replay;
-    # the cadence's maintain_table packs every month to one file
-    "q_stream_lake_maint",
-    # predicate routing over CATALOG tables (ROADMAP_r12 #2 pulled
-    # forward): read_catalog_where consults the stats maintain_catalog
-    # records — skipping + full-scan + compound routes in the hash
-    "q_catalog_routing",
-]
-
-# Round-12 window additions (same 3-mode certification bar: DuckDB
-# oracle + selfcheck --pandas and --vanilla at sf0.001 AND sf0.01 before
-# entering). Kept to TWO new keys + two REVERIFY floors so the 50-slot
-# window clears the entire 46-key r05 staleness tail (VERDICT r11 #2).
-WINDOW_PRIORITY += [
-    # bucketed PARTITIONED tables (VERDICT r11 #5): month-partitioned
-    # facts bucket-by-custkey through publish_partition_overwrite; the
-    # fact-fact join is zero-Exchange across ALL partitions and an
-    # incremental one-month overwrite keeps co-location — join rollup,
-    # partition count, and commit seq in the hash
-    "q_bucket_partitioned",
-    # file-scoped deletion vectors (VERDICT r11 #6): the GDPR-then-
-    # resubscribe overwrite commits unconditionally — re-inserted keys
-    # downgrade to a file-scoped tombstone over the stale-holding
-    # carried files; register sizes + provenance-proving doubled prices
-    # in the hash; optimize purges file-aware
-    "q_delete_vectors",
-]
-
-# Round-13 window additions (same 3-mode certification bar: DuckDB
-# oracle + selfcheck --pandas and --vanilla at sf0.001 AND sf0.01 before
-# entering). q_bucket_partitioned stays from the r12 block (its r12
-# driver row errored on the dropped-entry bug, fixed this round — the
-# entry was never removed because WINDOW_PRIORITY keys auto-drop once
-# verified).
-WINDOW_PRIORITY += [
-    # bucketed-partitioned OPTIMIZE (VERDICT r12 #4): GDPR +
-    # resubscribe registers physically purged by rewriting affected
-    # partitions through the bucketed writer under the recorded spec —
-    # phase values bit-identical, register flag and seq in the hash,
-    # post-purge join plan-pinned zero-Exchange
-    "q_optimize_bucketed",
-    # bucketed PARTITIONED facts inside the catalog unit (VERDICT r12
-    # #5): fact+fact+dim staged bucketed (facts also month-partitioned)
-    # and committed by ONE catalog swap; three-way co-located join +
-    # partition-pruned June subtree + catalog seq in the hash;
-    # torn-pair crash test in tests/test_publish.py
-    "q_catalog_bucketed_partitioned",
-    # catalog-table lifecycle (VERDICT r12 #5/#8): publish_catalog_
-    # deletes + publish_catalog_increments — GDPR delete then a
-    # resubscribe increment, both single-swap commits; tombstones
-    # reconcile with stats-narrowed candidates (11x candidate
-    # reduction measured in tools/catalog_reconcile_probe.py); phase
-    # rollups + catalog seq in the hash
-    "q_catalog_increment",
-    # the streaming daily-ingest loop over the partitioned catalog
-    # (catalog_increment_batch): three read-merge-write micro-batch
-    # commits == the one-shot rollup, batching-independence + the
-    # catalog seq in the hash; live foreachBatch path + crash seam in
-    # tests/test_streaming.py
-    "q_stream_catalog_increment",
-]
-
-
-# Keys whose check was UPGRADED after their last driver row (e.g. a
-# rows-only query that gained a real SQL oracle), mapped to the LAST round
-# whose result predates the upgrade: green rows from rounds <= that value
-# don't count, so the window re-runs the key once and the first
-# post-upgrade green row re-verifies it permanently (an unconditional
-# exclusion would re-queue the key forever, wasting a window slot).
-REVERIFY: dict[str, str] = {
-    # r04 rewrote the money math to exact integer micro-units (both Spark
-    # and oracle): totals are the same exact rationals but the final
-    # double can differ in the last ulp from the r02-verified decimal
-    # path, so the old green row no longer certifies today's values
-    "q_join_payments_orders": "r03",
-    # r05 moved the cumulative/total window sums (and class
-    # cross-multiplies) from BIGINT to DECIMAL(38,0) for 100 TB headroom;
-    # values at test sf are identical but the r04 row predates the code
-    "q_abc_analysis": "r04",
-    # r05 inlined the oracle term expressions (was a post-registration
-    # placeholder substitution); the assembled SQL should be byte-equal
-    # but the r04 row certifies the OLD assembly path
-    "q_bm25": "r04",
-    # r05 changed the seed VALUES literal escaping (backslash handling);
-    # current seed data contains neither escape char, but the r03/r02
-    # rows predate the loader change for the two seed-joining keys
-    "q_country_norm": "r04",
-    "q_fx_join": "r04",
-    # r06 extended the synth/decode path from 2 container kinds (PNG/WAV)
-    # to 4 (+JPEG/MP4) and widened the output schema (+total_duration);
-    # the r05 row certifies the old 2-kind output
-    "q_media_dimensions": "r05",
-    # r07 refactored the cell assignment + probe/rerank bodies into
-    # helpers shared with the incremental index (pinned_anchors /
-    # assign_cells / ivf_probe_rerank); values are identical (same argmax
-    # tie-break chain, selfcheck-verified in all three modes) but the r06
-    # row certifies the pre-refactor inline body
-    "q_similarity_ivf_pinned": "r06",
-    # r08 extracted the gauge/refit bodies into cell_drift_gauge /
-    # refit_partial so the streaming maintenance job
-    # (run_ann_maintenance) shares them; values identical (same
-    # expressions, selfcheck-verified) but the r07 rows certify the
-    # pre-refactor inline bodies
-    # (q_ivf_cell_drift's floor was r07 here; superseded by the r10
-    # entry below)
-    "q_ivf_refit_partial": "r07",
-    # r09 rerouted the partitioned write paths through the ATOMIC
-    # manifest publish (publish_partition_overwrite) and the read-back
-    # through read_current; values identical (same final state,
-    # selfcheck-verified in all three modes) but the r08/r07 rows
-    # certify the in-place dynamic-overwrite path
-    # (q_partition_overwrite's and q_stream_mart_upsert's floors were
-    # r08 here; superseded by the r10 entries below — dict literals keep
-    # the LAST duplicate, so earlier floors fold into the latest entry)
-    # r10 rewrote the dup-span cross-doc filter as hash-partition window
-    # aggregates (one Generate subtree, one shuffle — was groupBy +
-    # self-semi-join); values identical (3-mode selfcheck) but the r09
-    # rows certify the two-explode bodies
-    "q_dup_spans": "r09",
-    "q_dup_spans_rewrite": "r09",
-    # r10 moved dedup_clusters' label checkpoint from an every-4 cadence
-    # to lazy per-round (ADVICE r09 recompute regression); same fixpoint
-    # (also folds the older r03-rows-only and r08 convergence-contract
-    # floors for q_dedup_clusters — one key, latest floor wins)
-    "q_dedup_clusters": "r09",
-    "q_dedup_clusters_converged": "r09",
-    # r10 put the commit point behind the backend interface (local
-    # rename vs conditional PUT), added the _APPLIED vacuumed-replay
-    # ledger, and Hive-unescaped manifest partition keys; the default
-    # local path is byte-identical but the old rows certify the
-    # pre-backend bodies — re-certify the publish-protocol keys
-    "q_atomic_publish": "r09",
-    "q_publish_lifecycle": "r09",
-    "q_partition_overwrite": "r09",
-    "q_lake_history": "r09",
-    # r10 routed merge_upsert's target read through publish.read_current
-    # for manifest-published targets (ADVICE r09 round-trip fix)
-    "q_merge_upsert": "r09",
-    # r10 parameterized the ANN cells retention (cells_retain knob,
-    # verdict r09 #6); default behavior identical
-    "q_ann_maintenance": "r09",
-    # r10 added table-format maintenance to the publish protocol: every
-    # manifest reader (read_current / read_snapshot / read_partitions)
-    # now applies merge-on-read delete tombstones, partition overwrites
-    # carry stats/tombstone metadata, and vacuum retains tombstone
-    # files. Values are identical for tables without tombstones (all
-    # existing keys), but the old rows certify the pre-maintenance read
-    # bodies — re-certify every key that reads through the manifest
-    "q_registry_build": "r09",
-    "q_time_travel": "r09",
-    "q_partition_pruned_read": "r09",
-    "q_stream_mart_upsert": "r09",
-    "q_ivf_cell_drift": "r09",
-    # r10 schema-in-log: write_day_increment commits now record the
-    # manifest schema and its reader resolves through it
-    "q_rollup_incremental": "r09",
-}
-
-# r11 rewired the publish layer under every manifest table: auto-derived
-# txids gained CAS-unique suffixes + guarded orphan reclaims, partition
-# overwrites reconcile carried tombstones against the increment, Decimal
-# stats serialize as widened floats, the purge candidate scan reads under
-# the manifest schema, empty-file manifests synthesize schema-typed empty
-# frames in every reader, and read_where gained try_cast predicates + a
-# conservative mixed-key fallback. Values are identical for every
-# existing key (3-mode selfcheck re-run), but the old rows certify the
-# pre-r11 bodies — re-certify every key that reads or writes through the
-# manifest layer. (dict.update keeps these as the operative floors.)
-REVERIFY.update(
-    dict.fromkeys(
-        [
-            "q_partition_overwrite", "q_atomic_publish",
-            "q_publish_lifecycle", "q_registry_build", "q_time_travel",
-            "q_partition_pruned_read", "q_lake_history",
-            "q_publish_contention", "q_replay_horizon", "q_stats_skipping",
-            "q_optimize_compact", "q_mor_delete", "q_schema_evolution_lake",
-            "q_txn_commit", "q_merge_upsert", "q_stream_mart_upsert",
-            "q_rollup_incremental", "q_ann_maintenance", "q_ivf_cell_drift",
-        ],
-        "r10",
-    )
-)
-
-
-# r12 upgrades. Scope note: the r12 ADVICE fixes to publish.py (decimal
-# partition bounds, legacy string-stats fallback, bucket-entry respec
-# hash, stats carry on compaction, null-stats sentinel) are all gated to
-# inputs NO certified key produces — decimal partition keys, pre-r11
-# manifests, same-txid respecs, catalog tables with prior stats_cols,
-# zero-row files — each covered by a dedicated pytest across both commit
-# backends, so they do not re-floor the manifest-key family the way the
-# r11 rewiring did. Likewise the r12 bucketed-partitioned and
-# deletion-vector surfaces: publish_partition_overwrite's bucket branch
-# and the scoped-tombstone downgrade only activate for bucket_col
-# publishes and manifests carrying scoped_deletes (none exist in any
-# certified key's lineage — the old stale-copy case RAISED, so no green
-# row ever exercised it); every reader's new scoped hook is an early
-# return on the manifests certified keys produce. Each new path carries
-# its own keyed certificate (q_bucket_partitioned, q_delete_vectors)
-# plus pytest coverage across both backends. Only keys whose own
-# bodies/oracles changed re-floor:
-REVERIFY.update(
-    {
-        # r12 derives the fragmented file counts from the
-        # ceil(n/ceil(n_dim/3)) closed form (shared maxRecordsPerFile
-        # cap over one write task per table) instead of repartition(4)/
-        # repartition(3) literals (VERDICT r11 #7) — the hashed
-        # n_files_fact/n_files_dim values changed
-        "q_catalog_maintain": "r11",
-        # r12 folds the tombstoned bucketed read into the certificate
-        # (VERDICT r11 #8): a second hashed phase re-reads through
-        # read_bucketed after publish_deletes tombstones every 10th
-        # orderkey — new schema (phase column) and new rows
-        "q_bucket_manifest": "r11",
-    }
-)
-
-# r13 upgrades (VERDICT r12 'missing' #6): the three permanently
-# rows-only keys gained deterministic-bound oracles (the q_hll_union /
-# q_sketch_error pattern — exact values hash-checked, sketch/learned-
-# index accuracy pinned as computed property flags). Their old
-# err=no_oracle rows counted as verified; re-floor so the window runs
-# each once under the real hash check.
-REVERIFY.update(
-    {
-        "q_approx_distinct": "r12",
-        "q_approx_percentiles": "r12",
-        "q_similarity_ivf": "r12",
-    }
-)
-
-# r14 floors (VERDICT r13 #3): only 4 of the ~30 keys the r13 optimizer
-# touched fell inside the r13 driver window; every key whose BODY the
-# r13 or r14 optimization rounds rewrote re-floors here so the r14
-# window independently certifies the semantic-preserving claims (the
-# pre-split-token rewrites, the xxhash64 key narrowing, the r14
-# span_islands fold / min_by dedup / contamination distinct removal /
-# (xxhash64, length) widening / scoped-delete mask / row_assign IVF /
-# lazy checkpoints). Green rows from <= r13 predate those bodies.
-REVERIFY.update(
-    dict.fromkeys(
-        [
-            # r13 batch 1/2 (pre-split tokens + xxhash64 internal keys)
-            "q_dedup_minhash", "q_dedup_ngram", "q_lsh_bucket_skew",
-            "q_sketch_error", "q_minhash_pr", "q_boilerplate",
-            "q_containment", "q_ngram_novelty", "q_span_dedup_rewrite",
-            "q_repetition_score", "q_dedup_lsh_incremental",
-            # r13 batch 4 + r14 widening (doc-grain content keys)
-            "q_dedup_exact", "q_crossmodal_dedup", "q_dedup_cross_source",
-            "q_split_leakage", "q_dataset_card", "q_corpus_filter",
-            "q_corpus_diff",
-            # r14 restructures (span fold, contamination, curation,
-            # fraction round-trip, IVF row_assign)
-            "q_dup_spans", "q_dup_spans_rewrite", "q_dup_spans_incremental",
-            "q_dup_span_fraction", "q_contamination", "q_curation_pipeline",
-            "q_similarity_ivf_incremental",
-            # r13/r14 graph + checkpoint-laziness consumers
-            "q_pagerank", "q_pagerank_converged", "q_pagerank_dangling",
-            # r14 scoped-delete mask rewrite (keys whose lineage carries
-            # scoped groups / reads through the mask)
-            "q_delete_vectors", "q_optimize_bucketed", "q_catalog_increment",
-            "q_mor_delete",
-        ],
-        "r13",
-    )
-)
-
-
-def _scan_correctness() -> dict[str, str]:
-    """Fold driver-verified keys from every CORRECTNESS_r*.json next to the
-    repo root into DRIVER_VERIFIED: hash_match=true is a green row;
-    err='no_oracle' with a recorded row count is the rows-only check (the
-    strongest result a no-oracle query can get)."""
+def verified_keys() -> dict[str, str]:
+    """Map each driver-verified key to its LATEST green round: hash_match=true
+    is a green row; err='no_oracle' with a recorded row count is the
+    rows-only check (the strongest result a no-oracle query can get).
+    Unreadable files are skipped."""
     import json
     from pathlib import Path
 
-    verified: dict[str, str] = dict(DRIVER_VERIFIED)
+    verified: dict[str, str] = {}
     root = Path(__file__).resolve().parent.parent
     for p in sorted(root.glob("CORRECTNESS_r*.json")):
         rnd = p.stem.split("_")[-1]
@@ -559,46 +74,21 @@ def _scan_correctness() -> dict[str, str]:
                 and row.get("spark_rows") is not None
             )
             if green:
-                # keep the LATEST green round (files scan in round order)
-                # so REVERIFY can tell pre- from post-upgrade results
+                # files scan in round order, so the last write is the latest
                 verified[key] = rnd
     return verified
 
 
-def verified_keys() -> dict[str, str]:
-    """Driver-verified keys that do NOT need a window slot: keys whose
-    latest green CORRECTNESS round postdates any REVERIFY upgrade. The
-    single definition of "verified" — ordered_keys and the
-    window-coverage test must share it."""
-    return {
-        k: v
-        for k, v in _scan_correctness().items()
-        if not (k in REVERIFY and v <= REVERIFY[k])
-    }
-
-
 def ordered_keys() -> list[str]:
-    """Window order: priority list (minus keys a later round already
-    verified), then remaining unverified keys in registration order, then
-    already-driver-verified keys ordered OLDEST green round first — so the
-    driver's 50-entry window always hits the keys with no green
-    CORRECTNESS row yet, and once the catalog is fully verified the window
-    becomes a rolling re-verification that cycles through the stalest
-    certifications instead of re-checking the first-registered 50 forever
-    (verdict r5 "What's wrong" #2)."""
-    missing = set(WINDOW_PRIORITY) - set(QUERIES)
-    if missing:
-        raise ValueError(f"WINDOW_PRIORITY names unknown queries: {missing}")
+    """Window order: keys with no green row first, in registration order,
+    then verified keys OLDEST latest-green round first (ties in
+    registration order) — so once every key is verified the window is a
+    rolling re-verification of the stalest certifications."""
     verified = verified_keys()
-    prio = [k for k in WINDOW_PRIORITY if k not in verified]
-    seen = set(prio)
-    rest = [k for k in QUERIES if k not in seen and k not in verified]
-    reg_pos = {k: i for i, k in enumerate(QUERIES)}
-    done = sorted(
-        (k for k in QUERIES if k not in seen and k in verified),
-        key=lambda k: (verified[k], reg_pos[k]),
-    )
-    return prio + rest + done
+    fresh = [k for k in QUERIES if k not in verified]
+    # sorted() is stable, so equal rounds keep registration order
+    done = sorted((k for k in QUERIES if k in verified), key=verified.__getitem__)
+    return fresh + done
 
 
 def load_all() -> None:

@@ -533,7 +533,7 @@ def q_stream_token_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# streaming NEAR-dup dedup (docs/ROADMAP_r07.md #1): MinHash band buckets
+# streaming NEAR-dup dedup: MinHash band buckets
 # as the state key — the live twin the near-dup family lacked (digest
 # dedup above streams EXACT content only)
 # --------------------------------------------------------------------------
@@ -671,7 +671,7 @@ def token_rollup_stream(docs: DataFrame, watermark: str = "2 hours") -> DataFram
 
 
 # --------------------------------------------------------------------------
-# streaming ANN ingest (docs/ROADMAP_r08.md #2): new embeddings assign to
+# streaming ANN ingest: new embeddings assign to
 # the FROZEN serving quantizer scan-side — the live half of the
 # incremental IVF maintenance loop (q_similarity_ivf_incremental assigns
 # the daily batch; this assigns the tail as it arrives)
@@ -923,7 +923,7 @@ def ann_apply_batch(
       instead of raising on the duplicate txid, and a replay of a
       superseded batch never regresses the pointer;
     - on refit, the arrivals FOLD into the published cells table
-      (compaction — ROADMAP_r10 #1): one atomic cells snapshot (txid
+      (compaction): one atomic cells snapshot (txid
       ``b<id>``) absorbs corpus + every arrival so far, then the folded
       subdirs truncate, so the gauge's input is bounded by the drift
       cadence, not the stream lifetime. A replay that finds the fold
@@ -1233,8 +1233,8 @@ def catalog_apply_batch(
     crash_hook=None,
     buckets: dict[str, dict] | None = None,
 ) -> None:
-    """One micro-batch of the streaming CATALOG-pair loop (ROADMAP_r12
-    #6 pulled forward): ``derive_tables(batch_df) -> {name: frame}``
+    """One micro-batch of the streaming CATALOG-pair loop:
+    ``derive_tables(batch_df) -> {name: frame}``
     builds the batch's consistent table set (e.g. fact + refreshed dim),
     ``publish_tables`` commits the whole set with ONE pointer swap under
     txid ``b<id>`` (replay-idempotent: committed records skip, staged

@@ -74,14 +74,6 @@ def test_bench_headline_keys_exist():
     assert not missing, missing
 
 
-def test_window_priority_and_reverify_name_real_keys():
-    from saas_analytics_pipeline_spark import qcatalog
-
-    qcatalog.load_all()
-    assert set(qcatalog.WINDOW_PRIORITY) <= set(qcatalog.QUERIES)
-    assert set(qcatalog.REVERIFY) <= set(qcatalog.QUERIES)
-
-
 def test_catalog_freeze_every_key_verified_or_windowed():
     """r05 freeze invariant: every registered key either has a green
     driver row or sits inside the 50-slot verification window — no key

@@ -43,9 +43,9 @@ def test_scale_lint_swept_the_whole_catalog():
 
 def test_catalog_doc_covers_the_whole_catalog():
     """docs/CATALOG.md must be exactly what tools/catalog_doc.py renders
-    for the registered catalog — every key, its oracle status, its
-    ``file:line`` and its first docstring sentence — so a key added,
-    moved or re-documented without rerunning the tool fails here; same
+    for the registered catalog — every key, its oracle status, its source
+    file and its first docstring sentence — so a key added, moved to
+    another file or re-documented without rerunning the tool fails here; same
     ratchet as the scale-lint check (tools/evidence_check.py runs the
     count half as a pre-commit hook)."""
     import importlib.util

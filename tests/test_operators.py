@@ -7,7 +7,11 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from saas_analytics_pipeline_spark.operators.dedup import near_dup_pairs, shingles
+from saas_analytics_pipeline_spark.operators.dedup import (
+    exact_text_pairs,
+    near_dup_pairs,
+    shingles,
+)
 from saas_analytics_pipeline_spark.operators.scd2 import build_scd2, scd2_overlaps
 from saas_analytics_pipeline_spark.operators.sessionize import sessionize
 from saas_analytics_pipeline_spark.operators.similarity import cosine_topk
@@ -168,6 +172,18 @@ def test_near_dup_pairs_finds_planted_dup(spark):
     pairs = near_dup_pairs(docs, jaccard_threshold=0.5).collect()
     assert [(p["a"], p["b"]) for p in pairs] == [(1, 2)]
     assert pairs[0]["jaccard"] > 0.7
+
+
+def test_exact_text_pairs_reject_hash_collisions(spark):
+    """q_crossmodal_dedup's exact-text pairs join on (xxhash64, length)
+    only; forcing every row onto ONE key (constant h, equal lengths) must
+    still pair only the identical texts, never a colliding distinct one."""
+    docs = spark.createDataFrame(
+        [(1, "abcd"), (2, "wxyz"), (3, "abcd")], "doc_id long, text string"
+    )
+    h = docs.select("doc_id", "text", F.lit(7).alias("h"), F.lit(4).alias("hl"))
+    pairs = exact_text_pairs(h).collect()
+    assert [(p["a"], p["b"]) for p in pairs] == [(1, 3)]
 
 
 def test_cosine_topk_exact(spark):

@@ -11,8 +11,11 @@ from saas_analytics_pipeline_spark.operators.joins import (
     q_join_star_orders,
     q_skew_join,
 )
+from saas_analytics_pipeline_spark.session import scoped_confs
 from saas_analytics_pipeline_spark.sources import load_table
 from saas_analytics_pipeline_spark.staging import q_filter_eq
+
+_NO_BROADCAST = {"spark.sql.autoBroadcastJoinThreshold": "-1"}
 
 
 def plan_of(df) -> str:
@@ -104,17 +107,15 @@ def test_bucketed_join_skips_shuffle(spark, sf_dir, tmp_path):
     write_bucketed(o, "t_orders_b", "o_orderkey", buckets=8)
     write_bucketed(li.withColumnRenamed("l_orderkey", "o_orderkey"),
                    "t_lineitem_b", "o_orderkey", buckets=8)
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("t_orders_b").join(
-            spark.table("t_lineitem_b"), "o_orderkey"
-        )
-        plan = plan_of(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, "bucketed join must not shuffle"
+        with scoped_confs(spark, _NO_BROADCAST):
+            joined = spark.table("t_orders_b").join(
+                spark.table("t_lineitem_b"), "o_orderkey"
+            )
+            plan = plan_of(joined)
+            assert "SortMergeJoin" in plan
+            assert "Exchange" not in plan, "bucketed join must not shuffle"
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
         spark.sql("DROP TABLE IF EXISTS t_orders_b")
         spark.sql("DROP TABLE IF EXISTS t_lineitem_b")
 
@@ -800,10 +801,7 @@ def test_bloom_prejoin_filter_injected_below_exchange(spark, sf_dir):
         bloom_prejoin_frame,
     )
 
-    prev = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
-    for k, v in _BLOOM_CONFS.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_confs(spark, _BLOOM_CONFS):
         df = bloom_prejoin_frame(spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "might_contain" in plan, "runtime bloom filter not injected"
@@ -818,12 +816,6 @@ def test_bloom_prejoin_filter_injected_below_exchange(spark, sf_dir):
             "no Exchange above the bloom probe — filter not below the "
             "shuffle:\n" + plan
         )
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_bucket_join_key_frame_is_colocated(spark, sf_dir):
@@ -836,18 +828,16 @@ def test_bucket_join_key_frame_is_colocated(spark, sf_dir):
         bucket_join_frame,
     )
 
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        df = bucket_join_frame(spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert plan.count("Bucketed: true") == 2
-        # exactly the two aggregate exchanges (partial->final hash, then
-        # the orderBy range): bucketed join inputs contribute ZERO
-        assert plan.count("Exchange") == 2, plan
+        with scoped_confs(spark, _NO_BROADCAST):
+            df = bucket_join_frame(spark, sf_dir)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "SortMergeJoin" in plan
+            assert plan.count("Bucketed: true") == 2
+            # exactly the two aggregate exchanges (partial->final hash, then
+            # the orderBy range): bucketed join inputs contribute ZERO
+            assert plan.count("Exchange") == 2, plan
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
         tag = sf_dir.rstrip("/").split("/")[-1].replace(".", "_")
         spark.sql(f"DROP TABLE IF EXISTS bkt_orders_{tag}")
         spark.sql(f"DROP TABLE IF EXISTS bkt_lineitem_{tag}")
@@ -924,10 +914,7 @@ def test_bucket_manifest_frames_join_with_zero_exchange_and_sort(
         bucket_manifest_phases,
     )
 
-    prev = {k: spark.conf.get(k, None) for k in _BUCKET_MANIFEST_CONFS}
-    try:
-        for k, v in _BUCKET_MANIFEST_CONFS.items():
-            spark.conf.set(k, v)
+    with scoped_confs(spark, _BUCKET_MANIFEST_CONFS):
         p1, p2 = bucket_manifest_phases(spark, sf_dir)
 
         plan1 = p1._jdf.queryExecution().executedPlan().toString()
@@ -959,12 +946,6 @@ def test_bucket_manifest_frames_join_with_zero_exchange_and_sort(
         n1 = p1.agg(F.sum("n_orders")).collect()[0][0]
         n2 = p2.agg(F.sum("n_orders")).collect()[0][0]
         assert n1 > n2 > 0, (n1, n2)
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_bucket_partitioned_frames_join_with_zero_exchange(spark, sf_dir):
@@ -979,9 +960,7 @@ def test_bucket_partitioned_frames_join_with_zero_exchange(spark, sf_dir):
         bucket_partitioned_frames,
     )
 
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    with scoped_confs(spark, _NO_BROADCAST):
         # checkpoint_phase1=False keeps p1 LAZY across the revision
         # republish — the exact pattern that crashed r12's driver run
         # (VERDICT r12 #1: the superseded catalog entry was eagerly
@@ -1010,8 +989,6 @@ def test_bucket_partitioned_frames_join_with_zero_exchange(spark, sf_dir):
         assert all(r2[k]["rev96"] >= r1[k]["rev96"] for k in r1)
         assert any(r2[k]["rev96"] > r1[k]["rev96"] for k in r1)
         assert all(r2[k]["rev97"] == r1[k]["rev97"] for k in r1)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
 
 
 def test_optimize_bucketed_frames_stay_colocated_and_execute(spark, sf_dir):
@@ -1025,9 +1002,7 @@ def test_optimize_bucketed_frames_stay_colocated_and_execute(spark, sf_dir):
         optimize_bucketed_frames,
     )
 
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    with scoped_confs(spark, _NO_BROADCAST):
         p1, p2 = optimize_bucketed_frames(spark, sf_dir)
         plan = p2._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in plan
@@ -1045,8 +1020,6 @@ def test_optimize_bucketed_frames_stay_colocated_and_execute(spark, sf_dir):
             assert r1[k]["n_cust"] == r2[k]["n_cust"]
         assert all(r["has_registers"] == 1 for r in r1.values())
         assert all(r["has_registers"] == 0 for r in r2.values())
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
 
 
 def test_catalog_bucketed_partitioned_star_zero_exchange(spark, sf_dir):
@@ -1072,9 +1045,7 @@ def test_catalog_bucketed_partitioned_star_zero_exchange(spark, sf_dir):
     cat = scratch_path("saas_lake_cat_bktp", sf_dir)
     assert os.path.isdir(cat)
     tag = sf_tag(sf_dir)
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    with scoped_confs(spark, _NO_BROADCAST):
         t96 = P.read_catalog_bucketed_partitioned(
             spark, cat, "f96", f"tcbp96_{tag}"
         )
@@ -1099,8 +1070,6 @@ def test_catalog_bucketed_partitioned_star_zero_exchange(spark, sf_dir):
         pruned = t96.where(F.col("_p") == "199606")
         pplan = pruned._jdf.queryExecution().executedPlan().toString()
         assert "PartitionFilters" in pplan and "199606" in pplan, pplan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
 
 
 def test_catalog_increment_lifecycle_executes_and_stays_colocated(
@@ -1136,9 +1105,7 @@ def test_catalog_increment_lifecycle_executes_and_stays_colocated(
     cat = scratch_path("saas_lake_cat_incr", sf_dir)
     assert os.path.isdir(cat)
     tag = sf_tag(sf_dir)
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    with scoped_confs(spark, _NO_BROADCAST):
         tf = P.read_catalog_bucketed_partitioned(
             spark, cat, "fact", f"tci_f_{tag}"
         )
@@ -1153,8 +1120,6 @@ def test_catalog_increment_lifecycle_executes_and_stays_colocated(
         # fact or dim stream
         fact_smj = smj.split("BroadcastExchange")[0]
         assert "Exchange hashpartitioning" not in fact_smj, smj
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
 
 
 def test_dup_span_capped_path_has_no_per_hash_window_sort(spark, sf_dir):

@@ -2612,7 +2612,7 @@ def test_scoped_tombstones_apply_on_routed_and_snapshot_reads(spark, root):
 
 
 # ---------------------------------------------------------------------------
-# r12: bucketed tables inside the catalog unit (ROADMAP_r13 #5 pulled fwd)
+# bucketed tables inside the catalog unit
 # ---------------------------------------------------------------------------
 
 
@@ -2843,8 +2843,7 @@ def test_maintain_catalog_preserves_bucketed_partitioned_table(
 
 
 # ---------------------------------------------------------------------------
-# r13: catalog-table lifecycle — deletes, partition increments, reconcile
-# (VERDICT r12 #5/#8, ROADMAP_r13 #4)
+# catalog-table lifecycle — deletes, partition increments, reconcile
 # ---------------------------------------------------------------------------
 
 
@@ -2964,7 +2963,7 @@ def test_catalog_increment_reconciles_tombstones_stats_narrowed(
     register (downgrading to a file-scoped group over the CARRIED
     candidates when stale copies survive), and when maintain_catalog has
     annotated the delete key the candidate set is STATS-NARROWED instead
-    of every carried file (ROADMAP_r13 #4 / VERDICT r12 #8)."""
+    of every carried file."""
     # keys clustered by partition so per-file ck stats are narrow:
     # mk 1: ck 0..9, mk 2: ck 10..19, mk 3: ck 20..29
     rows = [

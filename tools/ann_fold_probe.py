@@ -1,4 +1,4 @@
-"""Measured A/B of the ANN arrivals compaction (ROADMAP_r10 #6).
+"""Measured A/B of the ANN arrivals compaction.
 
 run_ann_maintenance's drift gauge reads (published cells) UNION
 (unfolded arrivals) every micro-batch. Before r09 the arrivals log grew

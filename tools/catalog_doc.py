@@ -1,7 +1,7 @@
 """Generate docs/CATALOG.md: one line per registered query — key, oracle
-status, source location, and the docstring's first sentence. The
-user-facing index of the whole operator surface (SURVEY.md section 2 maps
-the reference; this maps the code).
+status, source file (which holds ``def <key>``), and the docstring's first
+sentence. The user-facing index of the whole operator surface (SURVEY.md
+section 2 maps the reference; this maps the code).
 
 Run after adding queries:  python tools/catalog_doc.py
 """
@@ -40,11 +40,13 @@ def render() -> str:
     ]
     for name, entry in sorted(qcatalog.QUERIES.items()):
         fn = entry.fn
+        # the file alone locates the key: `def <key>` names it there, and
+        # no line number churns the doc when code above it moves
+        assert fn.__name__ == name, f"{name} is registered on {fn.__name__}"
         src = Path(inspect.getsourcefile(fn)).relative_to(ROOT)
-        line = inspect.getsourcelines(fn)[1]
         oracle = "sql" if entry.oracle else "rows-only"
         what = first_sentence(entry.doc).replace("|", "\\|")
-        lines.append(f"| `{name}` | {oracle} | {src}:{line} | {what} |")
+        lines.append(f"| `{name}` | {oracle} | {src} | {what} |")
     return "\n".join(lines) + "\n"
 
 

@@ -1,6 +1,6 @@
 """Measured claim of the streaming CATALOG loop's maintenance cadence
-(streaming/jobs.catalog_apply_batch + plans/publish.maintain_catalog,
-VERDICT r11 #4 / ROADMAP_r12 #6 residue): catalog-unit maintenance cost
+(streaming/jobs.catalog_apply_batch + plans/publish.maintain_catalog):
+catalog-unit maintenance cost
 follows the INCREMENT'S fragmentation debt, never the catalog — a
 healthy table in the same catalog carries by reference (its manifest
 entry is byte-identical across the maintenance commit) no matter how

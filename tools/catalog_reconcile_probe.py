@@ -1,6 +1,6 @@
 """Measured claim of the catalog increment's STATS-NARROWED tombstone
 reconcile (plans/publish.publish_catalog_increments +
-_reconcile_tombstones, r13 — VERDICT r12 #8 / ROADMAP_r13 #4): when a
+_reconcile_tombstones): when a
 catalog table's delete key is annotated (maintain_catalog stats_cols),
 the file-scoped group a resubscribe leaves behind covers only the
 STALE-OVERLAPPING carried files — not every carried file — so the

@@ -1,5 +1,5 @@
 """Window-width sensitivity of the exact-substring dedup shape
-(q_dup_spans / dup_span_intervals — ROADMAP_r10 #3).
+(q_dup_spans / dup_span_intervals).
 
 Production exact-substring dedup runs at ~50-token windows; the keyed
 certificate pins RUN_W=8 (testdata docs are short). This probe measures,

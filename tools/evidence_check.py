@@ -1,7 +1,7 @@
 """Fast structural evidence check (verdict r11 "What's wrong" #1): the
 committed evidence records must match the CURRENT catalog:
 docs/SCALE_LINT.md its key count, docs/CATALOG.md exactly what
-tools/catalog_doc.py renders (every key's oracle status, file:line and
+tools/catalog_doc.py renders (every key's oracle status, source file and
 first docstring sentence). Two consecutive rounds
 ended with evidence stamped one commit before a key registration
 (r10: PROBES two commits early; r11: q_catalog_routing landed after the
