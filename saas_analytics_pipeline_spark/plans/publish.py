@@ -65,11 +65,18 @@ streaming maintenance loop needs (verdict r08 "what's wrong" #1).
 Code structure (docs/PUBLISH.md "Code map"): each protocol decision
 lives in one private helper — the parent-chain walk (``_lineage``),
 reader resolution (``_resolve``), the tombstone-applying scan
-(``_scan``), the data write (``_write_table_files``), the replay
-prologue (``_replayed``) and the one commit loop (``_cas_commit``,
-whose ``recheck`` argument carries each writer's conflict policy) — and
-every public reader and writer composes them, so pointer tables and
-catalog tables share every path.
+(``_scan``), the data write (``_write_table_files``), the one guarded
+reclaim (``_reclaim``), the replay prologue (``_replayed``) and the one
+commit loop (``_cas_commit``, whose ``recheck`` argument carries each
+writer's conflict policy) — and every public reader and writer composes
+them. Each per-table operation is written once — the delete
+(``_write_tombstone``), the increment (``_write_increment`` +
+``_overwrite_manifest``), the partition OPTIMIZE and scoped purge
+(``_optimized``) and the stats annotation (``_annotated``) — and
+returns a builder of the new table manifest; pointer writers commit it
+with ``_cas_commit``, catalog writers stage it (``_stage_manifest``) and
+swap the record (``_commit_catalog_record``). Pointer tables and
+catalog tables therefore share every path.
 
 Crash-injection coverage: tests/test_publish.py kills the writer at
 every barrier (after data, after manifest, mid-pointer) and proves
@@ -421,27 +428,31 @@ _CAS_RETRIES = 3  # bounded conditional-PUT retry budget per publish
 def _cas_commit(
     root: str,
     backend,
-    name: str,
+    txid: str,
     build: Callable[[dict | None], dict],
     prev: dict | None,
     etag,
     crash_hook: Callable[[str], None] | None = None,
     recheck: Callable[[dict | None], None] | None = None,
+    name_of: Callable[[str], str] = _manifest_name,
 ) -> str:
     """THE commit loop of every manifest and catalog-record writer:
-    write ``build(prev)`` to ``manifests/<name>`` (fsync'd), pass the
-    AFTER_MANIFEST barrier, and swap the pointer from ``etag`` to
-    ``name`` — rename under the fence or conditional PUT, the single
+    write ``build(prev)`` plus its lineage fields (_successor) to
+    ``manifests/<name_of(txid)>`` (fsync'd; manifest names by default),
+    pass the AFTER_MANIFEST barrier, and swap the pointer from ``etag``
+    to that name — rename under the fence or conditional PUT, the single
     commit point. A CAS loser re-reads the winner's state and hands it
     to the caller's conflict policy ``recheck``, which raises to refuse
     (touched-partition / touched-table drift, a switched delete key);
     otherwise the record is rebuilt on top of the winner and the swap
     retried, at most _CAS_RETRIES times. ``recheck=None`` is last-wins.
     The data files are already written and untouched by a retry."""
+    name = name_of(txid)
     path = os.path.join(root, "manifests", name)
     os.makedirs(os.path.dirname(path), exist_ok=True)
     for attempt in range(_CAS_RETRIES + 1):
-        _fsync_write(path, json.dumps(build(prev), sort_keys=True))
+        body = {**build(prev), **_successor(prev, name_of)}
+        _fsync_write(path, json.dumps(body, sort_keys=True))
         if crash_hook:
             crash_hook(AFTER_MANIFEST)
         try:
@@ -483,38 +494,36 @@ def _derive_txid(prev: dict | None, backend) -> str:
     return f"t{seq}-{uuid.uuid4().hex[:8]}"
 
 
-def _reclaim_orphan_manifest(root: str, backend, manifest_name: str) -> None:
-    """Remove a leftover manifest at a derived name ONLY if the committed
-    pointer does not reference it — deleting a manifest the pointer
-    names would corrupt the table (defense-in-depth: with fenced
-    monotone txids and suffixed CAS txids this cannot fire unless the
-    fence was bypassed)."""
-    path = os.path.join(root, "manifests", manifest_name)
-    if not os.path.exists(path):
-        return
-    cur, _ = backend.read_pointer(root)
-    if cur == manifest_name:
+def _reclaim(
+    root: str,
+    txid: str,
+    committed: dict | None,
+    name_of: Callable[[str], str] = _manifest_name,
+) -> None:
+    """THE guarded reclaim of every writer: remove what a crashed
+    attempt at ``txid`` left under ``root`` — the manifest (or catalog
+    record) ``name_of(txid)`` and the ``data/<txid>`` dir — but refuse,
+    before removing anything, when ``committed`` (the manifest the
+    pointer or catalog record commits for this root) IS that manifest
+    or references a file or tombstone in that dir: deleting either
+    would lose committed data. Fenced txids are monotone and CAS txids
+    carry a per-writer suffix, so only a derived txid colliding with an
+    earlier explicit one reaches the refusal."""
+    name = name_of(txid)
+    if committed is not None and (
+        committed.get("txid") == txid or txid in _referenced_txids(committed)
+    ):
         raise ConcurrentPublishError(
-            f"refusing to reclaim {manifest_name} under {root}: it is the "
-            "COMMITTED manifest (a concurrent writer published under this "
-            "txid)"
+            f"refusing to reclaim {name} and data/{txid} under {root}: the "
+            "committed state references them (a writer committed under "
+            "this txid)"
         )
-    os.remove(path)
-
-
-def _reclaim_orphan_data(root: str, txid: str, prev: dict | None) -> None:
-    """Remove a leftover data dir ONLY if no file of the committed
-    manifest lives in it — rmtree'ing a referenced txid dir would delete
-    committed data (same defense-in-depth as the manifest guard)."""
+    path = os.path.join(root, "manifests", name)
+    if os.path.exists(path):
+        os.remove(path)
     data_dir = os.path.join(root, "data", txid)
-    if not os.path.isdir(data_dir):
-        return
-    if txid in _referenced_txids(prev or {}):
-        raise ConcurrentPublishError(
-            f"refusing to reclaim data/{txid} under {root}: the committed "
-            "manifest references files in it"
-        )
-    shutil.rmtree(data_dir)
+    if os.path.isdir(data_dir):
+        shutil.rmtree(data_dir)
 
 
 def _referenced_txids(m: dict) -> set[str]:
@@ -782,7 +791,6 @@ def _reconcile_tombstones(
     prev: dict | None,
     df: DataFrame,
     derived_txid: str,
-    data_dir: str,
     touched: set[str],
 ) -> dict | None:
     """Delta-style delete semantics across partition overwrites (ADVICE
@@ -886,28 +894,14 @@ def _reconcile_tombstones(
         hits_empty = hits.limit(1).count() == 0
     if hits_empty:
         return None if scoped == scoped_prev else meta(dels)
-    carried = sorted(carried_set)
     scope_files: list[str] = []
-    if carried:
+    if carried_set:
         b = hits.agg(F.min(key).alias("lo"), F.max(key).alias("hi")).first()
-        stats = prev.get("stats") or {}
-        have = key in (prev.get("stats_cols") or [])
-        hlo = _stats_val(b["lo"], side="lo")
-        hhi = _stats_val(b["hi"], side="hi")
-        cand = []
-        for f in carried:
-            s = stats.get(f, {}).get(key) if have else None
-            if s is None:
-                cand.append(f)  # no stats: conservative candidate
-            elif s[0] is not None:
-                try:
-                    if not (s[1] < hlo or s[0] > hhi):
-                        cand.append(f)
-                except TypeError:
-                    # legacy string-recorded Decimal stats vs float
-                    # bounds: degrade to a conservative candidate, as
-                    # _files_for_stats_range does (ADVICE r11)
-                    cand.append(f)
+        cand = [
+            f
+            for f in _files_for_stats_range(prev, key, b["lo"], b["hi"])
+            if f in carried_set
+        ]
         if cand:
             stale = (
                 _read_files(spark, root, prev, cand)
@@ -917,6 +911,7 @@ def _reconcile_tombstones(
             )
             if stale:
                 scope_files = cand
+    data_dir = os.path.join(root, "data", derived_txid)
     if scope_files:
         # the re-inserted keys stay tombstoned, but only over the carried
         # candidate files — the deletion-vector downgrade from global
@@ -981,9 +976,7 @@ def _publish_locked(
         manifest["bucket"] = spec
     _, prev, etag = _read_head(root, backend)
     return _cas_commit(
-        root, backend, _manifest_name(txid),
-        lambda prev: {**manifest, **_successor(prev, _manifest_name)},
-        prev, etag, crash_hook,
+        root, backend, txid, lambda prev: manifest, prev, etag, crash_hook
     )
 
 
@@ -1038,9 +1031,7 @@ def ensure_published(
     with _maybe_fence(root, backend):
         if _replayed(root, backend, txid, _manifest_name(txid)):
             return _manifest_name(txid)
-        data_dir = os.path.join(root, "data", txid)
-        if os.path.isdir(data_dir):
-            shutil.rmtree(data_dir)
+        _reclaim(root, txid, _read_head(root, backend)[1])
         return _publish_locked(spark, df, root, txid, crash_hook, backend)
 
 
@@ -1060,8 +1051,7 @@ def publish_next(
     with writer_lock(root):
         prev = current_manifest(root)
         txid = _derive_txid(prev, LOCAL)
-        _reclaim_orphan_manifest(root, LOCAL, _manifest_name(txid))
-        _reclaim_orphan_data(root, txid, prev)
+        _reclaim(root, txid, prev)
         return _publish_locked(spark, df, root, txid, crash_hook)
 
 
@@ -1070,7 +1060,7 @@ def publish_next(
 # scoped-only mini-OPTIMIZE rewrites the scoped files once and clears
 # the groups — each group costs every reader two broadcast joins, so
 # unbounded growth between full OPTIMIZE runs degrades read plans
-# linearly. None disables the valve.
+# linearly.
 SCOPED_GROUPS_MAX = 8
 
 
@@ -1085,14 +1075,13 @@ def publish_partition_overwrite(
     bucket_col: str | None = None,
     n_buckets: int | None = None,
     sort_cols: list[str] | None = None,
-    max_scoped_groups: int | None = SCOPED_GROUPS_MAX,
 ) -> str:
     """Partition-granular commit + the scoped-group valve: see
     _publish_partition_overwrite for the protocol. After the commit,
-    if the root now carries more than ``max_scoped_groups``
+    if the root now carries more than ``SCOPED_GROUPS_MAX``
     scoped-tombstone groups, a scoped-only mini-OPTIMIZE
-    (``optimize_table(scoped_only=True)``, its own commit) rewrites
-    exactly the scoped partitions and clears the groups, bounding every
+    (``_optimize(scoped_only=True)``, its own commit) rewrites exactly
+    the scoped partitions and clears the groups, bounding every
     reader's anti-join count between full maintenance runs (r13,
     VERDICT r12 #7). Idempotent across replays: the valve consults the
     CURRENT pointer, and a post-valve current manifest has zero scoped
@@ -1101,10 +1090,9 @@ def publish_partition_overwrite(
         spark, df, root, partition_col, txid, crash_hook, backend,
         bucket_col, n_buckets, sort_cols,
     )
-    if max_scoped_groups is not None:
-        cur = current_manifest(root)
-        if cur and len(cur.get("scoped_deletes") or []) > max_scoped_groups:
-            optimize_table(spark, root, backend=backend, scoped_only=True)
+    cur = current_manifest(root)
+    if cur and len(cur.get("scoped_deletes") or []) > SCOPED_GROUPS_MAX:
+        _optimize(spark, root, backend, scoped_only=True)
     return name
 
 
@@ -1178,13 +1166,6 @@ def _publish_partition_overwrite(
     trusted-spec scan silently wrong."""
     with _maybe_fence(root, backend):
         _, prev, etag = _read_head(root, backend)
-        if prev is not None and "partitions" not in prev:
-            raise ValueError(
-                f"{root} was last published with the whole-snapshot "
-                "protocol; a partition overwrite would silently drop its "
-                "data — republish the full table once via "
-                "publish_partition_overwrite, or keep using publish_next"
-            )
         bucket_spec = None
         if bucket_col is not None:
             bucket_spec = _bucket_spec(bucket_col, n_buckets, sort_cols)
@@ -1199,20 +1180,12 @@ def _publish_partition_overwrite(
                     "bucketed reader silently wrong. Repeat the recorded "
                     "spec, or republish the table from scratch to change it"
                 )
-        # validate schema evolution BEFORE any data writes: a type
-        # conflict must fail the publish while it is still free
-        _evolved_schema(prev, df)
         if txid is None:
             txid = _derive_txid(prev, backend)
         elif _replayed(root, backend, txid, _manifest_name(txid)):
             return _manifest_name(txid)
-        # crashed orphan at this name — guarded: never reclaim a manifest
-        # the pointer references or a data dir the manifest's files span
-        _reclaim_orphan_manifest(root, backend, _manifest_name(txid))
-        _reclaim_orphan_data(root, txid, prev)
-        data_dir = os.path.join(root, "data", txid)
-        _, touched = _write_table_files(
-            spark, root, df, data_dir, txid, partition_col, bucket_spec
+        touched = _write_increment(
+            spark, root, prev, df, txid, partition_col, bucket_spec, root
         )
         if crash_hook:
             crash_hook(AFTER_DATA)
@@ -1231,18 +1204,47 @@ def _publish_partition_overwrite(
                 )
 
         return _cas_commit(
-            root, backend, _manifest_name(txid),
+            root, backend, txid,
             # tombstones reconcile per attempt, so a CAS retry reconciles
             # against the winner's tombstones, not our stale read
-            lambda prev: {
-                **_overwrite_manifest(
-                    spark, root, prev, df, txid, data_dir, partition_col,
-                    touched, bucket_spec,
-                ),
-                **_successor(prev, _manifest_name),
-            },
+            lambda prev: _overwrite_manifest(
+                spark, root, prev, df, txid, partition_col, touched,
+                bucket_spec,
+            ),
             prev, etag, crash_hook, refuse_drift,
         )
+
+
+def _write_increment(
+    spark: SparkSession,
+    root: str,
+    prev: dict | None,
+    df: DataFrame,
+    txid: str,
+    partition_col: str,
+    spec: dict | None,
+    what: str,
+) -> dict[str, list[str]]:
+    """THE increment prologue of both partition-overwrite writers
+    (pointer overwrites and catalog increments): refuse a base ``prev``
+    published whole-table, validate schema evolution while a type
+    conflict is still free (before any data write), reclaim a crashed
+    attempt at ``txid`` (guarded), and write ``df``'s partitions under
+    ``data/<txid>``. Returns the touched partition -> files map, which
+    _overwrite_manifest merges over the committed state."""
+    if prev is not None and "partitions" not in prev:
+        raise ValueError(
+            f"{what} was last published whole-table (the whole-snapshot "
+            "protocol); a partition overwrite would silently drop its data "
+            "— republish it partitioned once (publish_partition_overwrite, "
+            "or publish_tables(..., partitions={...}))"
+        )
+    _evolved_schema(prev, df)
+    _reclaim(root, txid, prev)
+    return _write_table_files(
+        spark, root, df, os.path.join(root, "data", txid), txid,
+        partition_col, spec,
+    )[1]
 
 
 def _overwrite_manifest(
@@ -1251,7 +1253,6 @@ def _overwrite_manifest(
     prev: dict | None,
     df: DataFrame,
     txid: str,
-    data_dir: str,
     partition_col: str,
     touched: dict[str, list[str]],
     spec: dict | None,
@@ -1271,9 +1272,7 @@ def _overwrite_manifest(
     m.update(_carried_metadata(prev, set(m["files"])))
     if spec is not None:
         m["bucket"] = spec
-    tomb_meta = _reconcile_tombstones(
-        spark, root, prev, df, txid, data_dir, set(touched)
-    )
+    tomb_meta = _reconcile_tombstones(spark, root, prev, df, txid, set(touched))
     if tomb_meta is not None:
         for k in ("deletes", "delete_key", "scoped_deletes"):
             m.pop(k, None)
@@ -1578,30 +1577,33 @@ def publish_stats(
         # unique under CAS: a concurrent writer deriving the same seq
         # must not share this manifest's name (ADVICE r10)
         txid = _derive_txid(prev, backend)
-
-        def annotated(prev: dict) -> dict:
-            # last-wins: a CAS retry re-annotates the WINNER's files
-            old = prev.get("stats") or {}
-            live = set(prev["files"])
-            stats = {f: dict(s) for f, s in old.items() if f in live}
-            todo = [
-                f
-                for f in prev["files"]
-                if any(c not in old.get(f, {}) for c in cols)
-            ]
-            for f, entry in _file_stats(spark, root, todo, cols, prev).items():
-                stats.setdefault(f, {}).update(entry)
-            return {
-                **prev,
-                "txid": txid,
-                "stats": stats,
-                "stats_cols": sorted(set(prev.get("stats_cols") or []) | set(cols)),
-                **_successor(prev, _manifest_name),
-            }
-
+        # last-wins: a CAS retry re-annotates the WINNER's files
         return _cas_commit(
-            root, backend, _manifest_name(txid), annotated, prev, etag
+            root, backend, txid,
+            lambda prev: {**_annotated(spark, root, prev, cols), "txid": txid},
+            prev, etag,
         )
+
+
+def _annotated(
+    spark: SparkSession, root: str, m: dict, cols: list[str]
+) -> dict:
+    """THE stats annotation of publish_stats and maintain_catalog: ``m``
+    with per-file min/max of ``cols`` recorded. Live files' entries
+    carry, only files missing a requested column's entry are scanned
+    (one _file_stats scan), and the stats register grows to cover
+    ``cols``."""
+    old = m.get("stats") or {}
+    live = set(m["files"])
+    stats = {f: dict(s) for f, s in old.items() if f in live}
+    todo = [f for f in m["files"] if any(c not in old.get(f, {}) for c in cols)]
+    for f, entry in _file_stats(spark, root, todo, cols, m).items():
+        stats.setdefault(f, {}).update(entry)
+    return {
+        **m,
+        "stats": stats,
+        "stats_cols": sorted(set(m.get("stats_cols") or []) | set(cols)),
+    }
 
 
 def read_skipping(
@@ -1639,15 +1641,36 @@ def _keyed_otherwise(m: dict | None, key_col: str) -> bool:
     )
 
 
-def _with_tombstone(
-    prev: dict, txid: str, tomb: list[str], key_col: str
-) -> dict:
-    """``prev`` plus one more global tombstone file: a metadata commit —
-    files, partitions, stats and scoped groups carry by reference."""
-    return {
-        **prev,
+def _write_tombstone(
+    spark: SparkSession,
+    root: str,
+    prev: dict,
+    keys_df: DataFrame,
+    key_col: str,
+    txid: str,
+    what: str,
+) -> Callable[[dict], dict]:
+    """THE delete of both delete writers (publish_deletes,
+    publish_catalog_deletes): refuse a second delete key, reclaim a
+    crashed attempt at ``txid`` (guarded), and write ``keys_df``'s
+    distinct ``key_col`` values as one tombstone file under
+    ``data/<txid>``. Returns the manifest builder that appends it to a
+    committed manifest's register — a metadata commit: files,
+    partitions, stats and scoped groups carry by reference."""
+    if _keyed_otherwise(prev, key_col):
+        raise ValueError(
+            f"{what} already carries tombstones keyed by "
+            f"{prev.get('delete_key')!r}; one delete key per table"
+        )
+    _reclaim(root, txid, prev)
+    tomb, _ = _write_table_files(
+        spark, root, keys_df.select(key_col).distinct().coalesce(1),
+        os.path.join(root, "data", txid), txid, None, None,
+    )
+    return lambda m: {
+        **m,
         "txid": txid,
-        "deletes": list(prev.get("deletes") or []) + tomb,
+        "deletes": list(m.get("deletes") or []) + tomb,
         "delete_key": key_col,
     }
 
@@ -1685,21 +1708,12 @@ def publish_deletes(
                 f"no committed snapshot under {root}; publish data before "
                 "publishing deletes"
             )
-        if _keyed_otherwise(prev, key_col):
-            raise ValueError(
-                f"table {root} already carries tombstones keyed by "
-                f"{prev.get('delete_key')!r}; one delete key per table"
-            )
         if txid is None:
             txid = _derive_txid(prev, backend)
         elif _replayed(root, backend, txid, _manifest_name(txid)):
             return _manifest_name(txid)
-        # crashed orphan at this name — guarded reclaims (ADVICE r10)
-        _reclaim_orphan_manifest(root, backend, _manifest_name(txid))
-        _reclaim_orphan_data(root, txid, prev)
-        tomb, _ = _write_table_files(
-            spark, root, keys_df.select(key_col).distinct().coalesce(1),
-            os.path.join(root, "data", txid), txid, None, None,
+        append = _write_tombstone(
+            spark, root, prev, keys_df, key_col, txid, f"table {root}"
         )
         if crash_hook:
             crash_hook(AFTER_DATA)
@@ -1712,12 +1726,8 @@ def publish_deletes(
                 )
 
         return _cas_commit(
-            root, backend, _manifest_name(txid),
-            lambda prev: {
-                **_with_tombstone(prev, txid, tomb, key_col),
-                **_successor(prev, _manifest_name),
-            },
-            prev, etag, crash_hook, refuse_key_switch,
+            root, backend, txid, append, prev, etag, crash_hook,
+            refuse_key_switch,
         )
 
 
@@ -1727,7 +1737,6 @@ def optimize_table(
     cluster_by: list[str] | None = None,
     backend=LOCAL,
     crash_hook: Callable[[str], None] | None = None,
-    scoped_only: bool = False,
 ) -> str:
     """OPTIMIZE as a commit: bin-pack every fragmented partition (more
     than one file) to a single file and physically purge merge-on-read
@@ -1755,14 +1764,21 @@ def optimize_table(
     rows sorted by the given columns (one in-task sort, no extra
     shuffle), so parquet row-group min/max tighten and the same commit's
     fresh file stats narrow; later predicates on the cluster keys skip
-    at both the manifest (read_skipping) and row-group level.
+    at both the manifest (read_skipping) and row-group level."""
+    return _optimize(spark, root, backend, cluster_by, crash_hook)
 
-    ``scoped_only``: the scoped-group VALVE's mini-OPTIMIZE (r13,
-    VERDICT r12 #7) — rewrite ONLY the partitions scoped-tombstone
-    groups cover, applying just the file-scoped masks; fragmented
-    partitions are left alone and the GLOBAL register carries untouched
-    (its purge is the full OPTIMIZE's job). Bounded incremental cost:
-    the rewrite set follows the scoped files, never the lake."""
+
+def _optimize(
+    spark: SparkSession,
+    root: str,
+    backend=LOCAL,
+    cluster_by: list[str] | None = None,
+    crash_hook: Callable[[str], None] | None = None,
+    scoped_only: bool = False,
+) -> str:
+    """optimize_table's pointer commit of _optimized; ``scoped_only`` is
+    the pointer valve's scoped purge. Returns the committed manifest
+    name (the current one when there was nothing to do)."""
     with _maybe_fence(root, backend):
         prev_name, prev, etag = _read_head(root, backend)
         if prev is None:
@@ -1772,162 +1788,20 @@ def optimize_table(
                 f"{root} is a whole-snapshot table; OPTIMIZE needs a "
                 "publish_partition_overwrite lineage"
             )
-        pc = prev["partition_col"]
-        parts: dict[str, list[str]] = prev["partitions"]
-        bucket_spec = prev.get("bucket")
-        if bucket_spec and cluster_by:
-            raise ValueError(
-                f"{root} is a bucketed partitioned table; its sort order "
-                "is the recorded bucket spec's SORTED BY — re-clustering "
-                "would break the trusted-spec reader. Republish to change "
-                "the spec"
-            )
-        # a requested re-cluster rewrites EVERY partition (the point is
-        # the new sort order); plain OPTIMIZE only the fragmented ones.
-        # A bucketed partition is PACKED at one file per bucket — the
-        # len>1 rule would mark every bucketed partition fragmented and
-        # break idempotency
-        packed = bucket_spec["n"] if bucket_spec else 1
-        if scoped_only:
-            if cluster_by:
-                raise ValueError(
-                    "scoped_only rewrites just the scoped partitions; "
-                    "re-clustering needs the full OPTIMIZE"
-                )
-            rewrite = set()  # only scoped partitions join below
-        elif cluster_by:
-            rewrite = set(parts)
-        else:
-            rewrite = {v for v, fs in parts.items() if len(fs) > packed}
-        tombstones = list(prev.get("deletes") or [])
-        scoped = list(prev.get("scoped_deletes") or [])
-        if scoped_only and not scoped:
-            return prev_name  # nothing scoped: the valve has no work
-        # scoped tombstones (r12 deletion vectors) purge here: every
-        # partition holding a scope file rewrites, with the masks
-        # applied FILE-aware below — a key anti-join alone would delete
-        # the re-inserted LIVE copies these scopes exist to protect
-        rewrite |= _scoped_partitions(parts, scoped)
-        if tombstones and not scoped_only:
-            key_col = prev["delete_key"]
-            keys = (
-                spark.read.parquet(
-                    *[os.path.join(root, f) for f in tombstones]
-                )
-                .select(key_col)
-                .distinct()
-            )
-            b = keys.agg(
-                F.min(key_col).alias("lo"), F.max(key_col).alias("hi")
-            ).first()
-            stats = prev.get("stats") or {}
-            have = key_col in (prev.get("stats_cols") or [])
-            tlo, thi = (
-                _stats_val(b["lo"], side="lo"),
-                _stats_val(b["hi"], side="hi"),
-            )
-            cand = []
-            for v, fs in parts.items():
-                for f in fs:
-                    s = stats.get(f, {}).get(key_col) if have else None
-                    if s is None:
-                        cand.append(f)  # no stats: conservative candidate
-                    elif s[0] is not None:
-                        try:
-                            if not (s[1] < tlo or s[0] > thi):
-                                cand.append(f)
-                        except TypeError:
-                            # legacy string stats: conservative candidate
-                            cand.append(f)
-            if cand and tlo is not None:
-                # candidates read under the manifest's recorded schema: on
-                # a schema-evolved table whose key column postdates the
-                # oldest files, inference from one footer could miss the
-                # column and break the purge join (ADVICE r10)
-                hit = (
-                    _read_files(spark, root, prev, cand)
-                    .join(keys, on=key_col, how="left_semi")
-                    .select(F.col(pc).cast("string").alias("_v"))
-                    .distinct()
-                    .collect()
-                )
-                rewrite |= {r["_v"] for r in hit}
-        if not rewrite and not tombstones and not scoped:
-            return prev_name  # nothing fragmented, nothing tombstoned
         # unique under CAS backends: two concurrent OPTIMIZEs over
         # disjoint fragmented partitions must not share a manifest name —
         # the loser would rewrite the winner's committed manifest with
         # parent == its own name, a self-loop breaking every parent-chain
         # walk (VERDICT r10 "what's wrong" #1)
         txid = _derive_txid(prev, backend)
-        # crashed orphan at this name — guarded reclaims (ADVICE r10)
-        _reclaim_orphan_manifest(root, backend, _manifest_name(txid))
-        _reclaim_orphan_data(root, txid, prev)
-        new_parts: dict[str, list[str]] = {}
-        rw_files = [f for v in sorted(rewrite) for f in parts[v]]
-        if rw_files:
-            # the purge IS the committed read semantics applied
-            # physically (scoped masks bind on this scan, then the global
-            # anti-join); the valve applies just the scoped masks
-            purged = prev
-            if scoped_only:
-                purged = {k: v for k, v in prev.items() if k != "deletes"}
-            # rewritten partitions go back through Spark's bucketed
-            # writer under the RECORDED spec (r12), so purges and
-            # compaction never cost the co-location the spec promises;
-            # unbucketed ones are clustered (OPTIMIZE-ZORDER-lite: one
-            # in-task sort, no extra shuffle) so parquet row-group
-            # min/max and the fresh file stats tighten on the sort keys
-            _, new_parts = _write_table_files(
-                spark, root, _scan(spark, root, purged, rw_files),
-                os.path.join(root, "data", txid), txid, pc, bucket_spec,
-                shape=lambda d: d.repartition(F.col("_p")).sortWithinPartitions(
-                    "_p", *(cluster_by or [])
-                ),
-            )
-        if crash_hook:
-            crash_hook(AFTER_DATA)
-        stats_cols = prev.get("stats_cols") or []
-        fresh_stats = (
-            _file_stats(
-                spark,
-                root,
-                [f for fs in new_parts.values() for f in fs],
-                stats_cols,
-                prev,
-            )
-            if stats_cols
-            else {}
+        out = _optimized(
+            spark, root, prev, txid, cluster_by, scoped_only, crash_hook
         )
-        base = {v: parts.get(v) for v in rewrite}
-
-        def optimized(prev: dict) -> dict:
-            merged = {
-                v: fs
-                for v, fs in (prev.get("partitions") or {}).items()
-                if v not in rewrite
-            }
-            merged.update(new_parts)
-            m = _partition_manifest(txid, pc, merged)
-            m.update(_successor(prev, _manifest_name))
-            if stats_cols:
-                live = set(m["files"])
-                m["stats"] = {
-                    f: s for f, s in (prev.get("stats") or {}).items() if f in live
-                }
-                m["stats"].update(fresh_stats)
-                m["stats_cols"] = stats_cols
-            if bucket_spec is not None:
-                m["bucket"] = bucket_spec
-            if "schema" in prev:
-                m["schema"] = prev["schema"]
-            if scoped_only and tombstones:
-                # the valve purges ONLY the scoped groups; the global
-                # register (and its key) carries — rewritten rows a
-                # global tombstone hides stay hidden by that register
-                m["deletes"] = tombstones
-                m["delete_key"] = prev["delete_key"]
-            return m
+        if out is None:
+            return prev_name
+        base, build = out
+        tombstones = list(prev.get("deletes") or [])
+        scoped = list(prev.get("scoped_deletes") or [])
 
         def refuse_drift(winner: dict | None) -> None:
             drifted = _drifted(winner, "partitions", base)
@@ -1944,9 +1818,159 @@ def optimize_table(
                 )
 
         return _cas_commit(
-            root, backend, _manifest_name(txid), optimized, prev, etag,
-            crash_hook, refuse_drift,
+            root, backend, txid, build, prev, etag, crash_hook, refuse_drift
         )
+
+
+def _optimized(
+    spark: SparkSession,
+    root: str,
+    prev: dict,
+    txid: str,
+    cluster_by: list[str] | None = None,
+    scoped_only: bool = False,
+    crash_hook: Callable[[str], None] | None = None,
+) -> tuple[dict, Callable[[dict], dict]] | None:
+    """THE partition-granular OPTIMIZE of one table, shared by
+    optimize_table and both scoped-group valves (pointer and catalog):
+    pick the rewrite set, reclaim a crashed attempt at ``txid``
+    (guarded), rewrite those partitions under ``data/<txid>`` at one
+    file per partition (per bucket on a bucketed table), and record
+    fresh stats for the written files when ``prev`` carries a stats
+    register. Returns None when there is nothing to do, else (base,
+    build): the rewritten partitions' file lists as of ``prev`` (the
+    drift baseline) and the builder of the optimized manifest over a
+    committed one.
+
+    ``scoped_only`` (the valve, r13, VERDICT r12 #7) rewrites ONLY the
+    partitions scoped-tombstone groups cover, applying just the
+    file-scoped masks; fragmented partitions are left alone and the
+    GLOBAL register carries untouched (its purge is the full OPTIMIZE's
+    job). Bounded incremental cost: the rewrite set follows the scoped
+    files, never the lake."""
+    pc = prev["partition_col"]
+    parts: dict[str, list[str]] = prev["partitions"]
+    bucket_spec = prev.get("bucket")
+    if bucket_spec and cluster_by:
+        raise ValueError(
+            f"{root} is a bucketed partitioned table; its sort order "
+            "is the recorded bucket spec's SORTED BY — re-clustering "
+            "would break the trusted-spec reader. Republish to change "
+            "the spec"
+        )
+    tombstones = list(prev.get("deletes") or [])
+    scoped = list(prev.get("scoped_deletes") or [])
+    # a requested re-cluster rewrites EVERY partition (the point is
+    # the new sort order); plain OPTIMIZE only the fragmented ones.
+    # A bucketed partition is PACKED at one file per bucket — the
+    # len>1 rule would mark every bucketed partition fragmented and
+    # break idempotency
+    packed = bucket_spec["n"] if bucket_spec else 1
+    if scoped_only:
+        if not scoped:
+            return None  # nothing scoped: the valve has no work
+        rewrite = set()  # only scoped partitions join below
+    elif cluster_by:
+        rewrite = set(parts)
+    else:
+        rewrite = {v for v, fs in parts.items() if len(fs) > packed}
+    # scoped tombstones (r12 deletion vectors) purge here: every
+    # partition holding a scope file rewrites, with the masks
+    # applied FILE-aware below — a key anti-join alone would delete
+    # the re-inserted LIVE copies these scopes exist to protect
+    rewrite |= _scoped_partitions(parts, scoped)
+    if tombstones and not scoped_only:
+        key_col = prev["delete_key"]
+        keys = (
+            spark.read.parquet(*[os.path.join(root, f) for f in tombstones])
+            .select(key_col)
+            .distinct()
+        )
+        b = keys.agg(
+            F.min(key_col).alias("lo"), F.max(key_col).alias("hi")
+        ).first()
+        cand = _files_for_stats_range(prev, key_col, b["lo"], b["hi"])
+        if cand and b["lo"] is not None:
+            # candidates read under the manifest's recorded schema: on
+            # a schema-evolved table whose key column postdates the
+            # oldest files, inference from one footer could miss the
+            # column and break the purge join (ADVICE r10)
+            hit = (
+                _read_files(spark, root, prev, cand)
+                .join(keys, on=key_col, how="left_semi")
+                .select(F.col(pc).cast("string").alias("_v"))
+                .distinct()
+                .collect()
+            )
+            rewrite |= {r["_v"] for r in hit}
+    if not rewrite and not tombstones and not scoped:
+        return None  # nothing fragmented, nothing tombstoned
+    _reclaim(root, txid, prev)
+    new_parts: dict[str, list[str]] = {}
+    rw_files = [f for v in sorted(rewrite) for f in parts[v]]
+    if rw_files:
+        # the purge IS the committed read semantics applied
+        # physically (scoped masks bind on this scan, then the global
+        # anti-join); the valve applies just the scoped masks
+        purged = prev
+        if scoped_only:
+            purged = {k: v for k, v in prev.items() if k != "deletes"}
+        # rewritten partitions go back through Spark's bucketed
+        # writer under the RECORDED spec (r12), so purges and
+        # compaction never cost the co-location the spec promises;
+        # unbucketed ones are clustered (OPTIMIZE-ZORDER-lite: one
+        # in-task sort, no extra shuffle) so parquet row-group
+        # min/max and the fresh file stats tighten on the sort keys
+        _, new_parts = _write_table_files(
+            spark, root, _scan(spark, root, purged, rw_files),
+            os.path.join(root, "data", txid), txid, pc, bucket_spec,
+            shape=lambda d: d.repartition(F.col("_p")).sortWithinPartitions(
+                "_p", *(cluster_by or [])
+            ),
+        )
+    if crash_hook:
+        crash_hook(AFTER_DATA)
+    stats_cols = prev.get("stats_cols") or []
+    fresh_stats = (
+        _file_stats(
+            spark,
+            root,
+            [f for fs in new_parts.values() for f in fs],
+            stats_cols,
+            prev,
+        )
+        if stats_cols
+        else {}
+    )
+
+    def build(m: dict) -> dict:
+        merged = {
+            v: fs
+            for v, fs in (m.get("partitions") or {}).items()
+            if v not in rewrite
+        }
+        merged.update(new_parts)
+        out = _partition_manifest(txid, pc, merged)
+        if stats_cols:
+            live = set(out["files"])
+            out["stats"] = {
+                f: s for f, s in (m.get("stats") or {}).items() if f in live
+            }
+            out["stats"].update(fresh_stats)
+            out["stats_cols"] = stats_cols
+        if bucket_spec is not None:
+            out["bucket"] = bucket_spec
+        if "schema" in m:
+            out["schema"] = m["schema"]
+        if scoped_only and tombstones:
+            # the valve purges ONLY the scoped groups; the global
+            # register (and its key) carries — rewritten rows a
+            # global tombstone hides stay hidden by that register
+            out["deletes"] = tombstones
+            out["delete_key"] = m["delete_key"]
+        return out
+
+    return {v: parts.get(v) for v in rewrite}, build
 
 
 def _scoped_partitions(
@@ -2141,8 +2165,6 @@ def _stage_table_snapshot(
     daily-ingest layout (date partitions + bucket co-location) living
     INSIDE the one-swap catalog unit."""
     data_dir = os.path.join(table_root, "data", txid)
-    if os.path.isdir(data_dir):  # crashed orphan from a previous attempt
-        shutil.rmtree(data_dir)
     spec = None
     if bucket is not None:
         spec = _bucket_spec(bucket["col"], bucket["n"], bucket.get("sort"))
@@ -2299,11 +2321,9 @@ def publish_tables(
         if txid is None:
             # auto-derived txid: NOT a replay — a crashed previous attempt
             # at this seq (record written, pointer never swapped) is an
-            # orphan; reclaim its record so the fresh frames stage anew
+            # orphan the guarded reclaims remove before the fresh frames
+            # stage anew
             txid = _derive_txid(prev, backend)
-            # crashed orphan at this name — guarded: never reclaim the
-            # record the catalog pointer references (ADVICE r10)
-            _reclaim_orphan_manifest(catalog_root, backend, _catalog_name(txid))
         elif _replayed(catalog_root, backend, txid, _catalog_name(txid)):
             # explicit txid: replay semantics (the streaming contract) —
             # an already-written catalog record means every table was
@@ -2313,6 +2333,8 @@ def publish_tables(
         staged: dict[str, str] = {}
         for name in sorted(frames):
             table_root = os.path.join(catalog_root, "tables", name)
+            committed = ((prev or {}).get("tables") or {}).get(name)
+            _reclaim(table_root, txid, _load_manifest(table_root, committed))
             staged[name] = _stage_table_snapshot(
                 spark, table_root, frames[name], txid,
                 bucket=(buckets or {}).get(name),
@@ -2336,18 +2358,21 @@ def _commit_catalog_record(
     base_tables: dict[str, str] | None = None,
     what: str = "commit",
 ) -> str:
-    """The catalog-record commit of every catalog-grain writer: merge
-    ``staged`` table manifests over the previous record's map and swap
-    once (_cas_commit). Without ``base_tables`` a CAS loser re-merges
-    over the winner's record and retries (last-wins: publish_tables).
-    With it (table -> manifest name as of the writer's read) the loser
-    retries IFF none of its tables drifted under it — disjoint-table
-    writers both commit, overlapping ones fail loudly."""
+    """The catalog-record commit of every catalog-grain writer: reclaim
+    a crashed attempt's record at ``txid`` (guarded — never the record
+    ``rec`` the pointer commits), merge ``staged`` table manifests over
+    the previous record's map and swap once (_cas_commit). Without
+    ``base_tables`` a CAS loser re-merges over the winner's record and
+    retries (last-wins: publish_tables). With it (table -> manifest name
+    as of the writer's read) the loser retries IFF none of its tables
+    drifted under it — disjoint-table writers both commit, overlapping
+    ones fail loudly."""
+    _reclaim(catalog_root, txid, rec, _catalog_name)
 
     def record(rec: dict | None) -> dict:
         tables = dict((rec or {}).get("tables") or {})
         tables.update(staged)
-        return {"txid": txid, "tables": tables, **_successor(rec, _catalog_name)}
+        return {"txid": txid, "tables": tables}
 
     def refuse_drift(winner: dict | None) -> None:
         drifted = _drifted(winner, "tables", base_tables)
@@ -2360,8 +2385,8 @@ def _commit_catalog_record(
             )
 
     return _cas_commit(
-        catalog_root, backend, _catalog_name(txid), record, rec, etag,
-        crash_hook, None if base_tables is None else refuse_drift,
+        catalog_root, backend, txid, record, rec, etag, crash_hook,
+        None if base_tables is None else refuse_drift, _catalog_name,
     )
 
 
@@ -2401,31 +2426,19 @@ def publish_catalog_deletes(
     and drops the registers); until then catalog time travel to a
     pre-delete seq still shows the keys.
 
-    Same invariants as the pointer-table publish_deletes: one delete
-    key per table; cost O(|keys|) + one record + one swap."""
+    The per-table body is publish_deletes' (_write_tombstone): one
+    delete key per table; cost O(|keys|) + one record + one swap."""
     with _maybe_fence(catalog_root, backend):
         _, rec, etag = _read_head(catalog_root, backend)
         troot, man_name, prev_m = _catalog_table(catalog_root, rec, table)
-        if _keyed_otherwise(prev_m, key_col):
-            raise ValueError(
-                f"catalog table {table!r} already carries tombstones "
-                f"keyed by {prev_m.get('delete_key')!r}; one delete key "
-                "per table"
-            )
         txid = _derive_txid(rec, backend)
-        data_dir = os.path.join(troot, "data", txid)
-        if os.path.isdir(data_dir):  # crashed orphan (never committed)
-            shutil.rmtree(data_dir)
-        tomb, _ = _write_table_files(
-            spark, troot, keys_df.select(key_col).distinct().coalesce(1),
-            data_dir, txid, None, None,
-        )
-        staged = _stage_manifest(
-            troot, _with_tombstone(prev_m, txid, tomb, key_col)
+        append = _write_tombstone(
+            spark, troot, prev_m, keys_df, key_col, txid,
+            f"catalog table {table!r}",
         )
         return _commit_catalog_record(
-            catalog_root, backend, {table: staged}, rec, txid, etag,
-            base_tables={table: man_name}, what="delete",
+            catalog_root, backend, {table: _stage_manifest(troot, append(prev_m))},
+            rec, txid, etag, base_tables={table: man_name}, what="delete",
         )
 
 
@@ -2436,30 +2449,30 @@ def publish_catalog_increments(
     txid: str | None = None,
     crash_hook: Callable[[str], None] | None = None,
     backend=LOCAL,
-    max_scoped_groups: int | None = SCOPED_GROUPS_MAX,
 ) -> str:
     """Catalog increments + the scoped-group valve: see
     _publish_catalog_increments for the protocol. After the commit, any
-    staged table now carrying more than ``max_scoped_groups``
-    scoped-tombstone groups gets a scoped-only purge
-    (``_catalog_scoped_purge``, its own record swap) — the same reader
+    staged table now carrying more than ``SCOPED_GROUPS_MAX``
+    scoped-tombstone groups gets the pointer valve's scoped-only purge
+    (_optimized, scoped_only) as its own record swap — the same reader
     plan-growth bound pointer tables get from
     publish_partition_overwrite's valve (r13, VERDICT r12 #7)."""
     name = _publish_catalog_increments(
         spark, catalog_root, frames, txid, crash_hook, backend
     )
-    if max_scoped_groups is not None:
-        rec = catalog_record(catalog_root)
-        for t in frames:
-            man_name = (rec or {}).get("tables", {}).get(t)
-            if man_name is None:
+    for t in sorted(frames):
+        with _maybe_fence(catalog_root, backend):
+            _, rec, etag = _read_head(catalog_root, backend)
+            troot, man_name, m = _catalog_table(catalog_root, rec, t)
+            if len(m.get("scoped_deletes") or []) <= SCOPED_GROUPS_MAX:
                 continue
-            m = _load_manifest(
-                os.path.join(catalog_root, "tables", t), man_name
+            purge_txid = _derive_txid(rec, backend)
+            _, build = _optimized(spark, troot, m, purge_txid, scoped_only=True)
+            _commit_catalog_record(
+                catalog_root, backend, {t: _stage_manifest(troot, build(m))},
+                rec, purge_txid, etag, base_tables={t: man_name},
+                what="scoped purge",
             )
-            if len(m.get("scoped_deletes") or []) > max_scoped_groups:
-                _catalog_scoped_purge(spark, catalog_root, t, backend)
-                rec = catalog_record(catalog_root)
     return name
 
 
@@ -2503,35 +2516,19 @@ def _publish_catalog_increments(
             )
         if txid is None:
             txid = _derive_txid(rec, backend)
-            _reclaim_orphan_manifest(catalog_root, backend, _catalog_name(txid))
         elif _replayed(catalog_root, backend, txid, _catalog_name(txid)):
             return _catalog_name(txid)
         staged: dict[str, str] = {}
         base_tables: dict[str, str] = {}
         for name in sorted(frames):
-            man_name = rec["tables"].get(name)
-            if man_name is None:
-                raise FileNotFoundError(
-                    f"table {name!r} not in catalog {catalog_root}; an "
-                    "increment needs a staged base — publish_tables first"
-                )
-            base_tables[name] = man_name
-            troot = os.path.join(catalog_root, "tables", name)
-            prev_m = _load_manifest(troot, man_name)
-            if "partitions" not in prev_m:
-                raise ValueError(
-                    f"catalog table {name!r} was staged whole-table; "
-                    "partition increments need publish_tables(..., "
-                    "partitions={...})"
-                )
-            df = frames[name]
-            _evolved_schema(prev_m, df)  # type conflicts fail while free
-            pc, spec = prev_m["partition_col"], prev_m.get("bucket")
-            data_dir = os.path.join(troot, "data", txid)
-            if os.path.isdir(data_dir):  # crashed orphan, never visible
-                shutil.rmtree(data_dir)
-            _, touched = _write_table_files(
-                spark, troot, df, data_dir, txid, pc, spec
+            troot, base_tables[name], prev_m = _catalog_table(
+                catalog_root, rec, name
+            )
+            df, spec = frames[name], prev_m.get("bucket")
+            pc = prev_m.get("partition_col")
+            touched = _write_increment(
+                spark, troot, prev_m, df, txid, pc, spec,
+                f"catalog table {name!r}",
             )
             # re-inserted keys exit the register (or downgrade to a
             # file-scoped group over the STATS-NARROWED carried
@@ -2539,7 +2536,7 @@ def _publish_catalog_increments(
             staged[name] = _stage_manifest(
                 troot,
                 _overwrite_manifest(
-                    spark, troot, prev_m, df, txid, data_dir, pc, touched, spec
+                    spark, troot, prev_m, df, txid, pc, touched, spec
                 ),
             )
             if crash_hook:
@@ -2547,58 +2544,6 @@ def _publish_catalog_increments(
         return _commit_catalog_record(
             catalog_root, backend, staged, rec, txid, etag, crash_hook,
             base_tables=base_tables, what="increment",
-        )
-
-
-def _catalog_scoped_purge(
-    spark: SparkSession, catalog_root: str, table: str, backend=LOCAL
-) -> str | None:
-    """The catalog twin of ``optimize_table(scoped_only=True)`` (r13
-    valve): rewrite ONLY the partitions the table's scoped-tombstone
-    groups cover, applying just the scoped masks — the global register
-    carries untouched — staged like any catalog commit and made visible
-    by one record swap. Returns the committed record name, or None when
-    the table carries no scoped groups."""
-    with _maybe_fence(catalog_root, backend):
-        _, rec, etag = _read_head(catalog_root, backend)
-        troot, man_name, m = _catalog_table(catalog_root, rec, table)
-        scoped = list(m.get("scoped_deletes") or [])
-        if not scoped:
-            return None
-        parts = m.get("partitions") or {}
-        rewrite = _scoped_partitions(parts, scoped)
-        txid = _derive_txid(rec, backend)
-        data_dir = os.path.join(troot, "data", txid)
-        if os.path.isdir(data_dir):  # crashed orphan
-            shutil.rmtree(data_dir)
-        rw_files = [f for v in sorted(rewrite) for f in parts[v]]
-        # scoped masks only: stale copies drop, re-inserted live rows
-        # and globally-tombstoned rows (still masked by the carried
-        # register) survive the rewrite
-        df = _scan(
-            spark, troot, {k: v for k, v in m.items() if k != "deletes"},
-            rw_files,
-        )
-        _, written = _write_table_files(
-            spark, troot, df, data_dir, txid,
-            m["partition_col"], m.get("bucket"),
-        )
-        merged = {v: fs for v, fs in parts.items() if v not in rewrite}
-        merged.update(written)
-        new_m = _partition_manifest(txid, m["partition_col"], merged)
-        carried = _carried_metadata(m, set(new_m["files"]))
-        carried.pop("scoped_deletes", None)  # the purge's whole point
-        if not carried.get("deletes"):
-            carried.pop("delete_key", None)
-        new_m.update(carried)
-        if m.get("bucket") is not None:
-            new_m["bucket"] = m["bucket"]
-        if "schema" in m:
-            new_m["schema"] = m["schema"]
-        return _commit_catalog_record(
-            catalog_root, backend, {table: _stage_manifest(troot, new_m)},
-            rec, txid, etag, base_tables={table: man_name},
-            what="scoped purge",
         )
 
 
@@ -3259,8 +3204,8 @@ def maintain_catalog(
             )
             if not needs_compact and not missing:
                 continue  # healthy: carries by reference
+            _reclaim(troot, txid, m)
             if needs_compact:
-                _reclaim_orphan_data(troot, txid, m)
                 # purge = the committed read semantics applied
                 # physically (scoped masks bind on this scan, then the
                 # global anti-join) — registers drop below. Compaction
@@ -3274,44 +3219,24 @@ def maintain_catalog(
                     shape=lambda d: d.coalesce(1),
                 )
                 compacted.append(tname)
-            else:
-                files = list(m["files"])  # metadata-only stats commit
-                new_parts = t_parts
-            new_m = {
-                "txid": txid,
-                "files": files,
-                "n_files": len(files),
-                "schema": m.get("schema"),
-            }
-            if t_parts is not None:
-                new_m["partition_col"] = m["partition_col"]
-                new_m["partitions"] = new_parts
-            if spec is not None:
-                new_m["bucket"] = spec
-            if not needs_compact:
-                # a metadata-only stats commit must CARRY the tombstone
-                # registers — dropping them here would resurrect deleted
-                # rows on the very next read (r13)
-                for reg in ("deletes", "delete_key", "scoped_deletes"):
-                    if reg in m:
-                        new_m[reg] = m[reg]
-            if cols:
-                stats = {
-                    f: dict(old_stats[f]) for f in old_stats if f in set(files)
+                new_m = {
+                    "txid": txid,
+                    "files": files,
+                    "n_files": len(files),
+                    "schema": m.get("schema"),
                 }
-                todo = [
-                    f
-                    for f in files
-                    if any(c not in stats.get(f, {}) for c in cols)
-                ]
-                for f, entry in _file_stats(
-                    spark, troot, todo, cols, new_m
-                ).items():
-                    stats.setdefault(f, {}).update(entry)
-                new_m["stats"] = stats
-                new_m["stats_cols"] = sorted(
-                    set(m.get("stats_cols") or []) | set(cols)
-                )
+                if t_parts is not None:
+                    new_m["partition_col"] = m["partition_col"]
+                    new_m["partitions"] = new_parts
+                if spec is not None:
+                    new_m["bucket"] = spec
+            else:
+                # a metadata-only stats commit CARRIES everything else —
+                # dropping the tombstone registers here would resurrect
+                # deleted rows on the very next read (r13)
+                new_m = {**m, "txid": txid}
+            if cols:
+                new_m = _annotated(spark, troot, new_m, cols)
                 annotated.append(tname)
             staged[tname] = _stage_manifest(troot, new_m)
         committed = prev_name

@@ -181,6 +181,19 @@ def run_available_now(
     )
 
 
+def _run_batches(stream: DataFrame, apply, checkpoint: str) -> StreamingQuery:
+    """The tail of every foreachBatch ``run_*`` driver: ``apply`` runs
+    once per micro-batch of ``stream``, checkpointed at ``checkpoint``,
+    over all available input and then the query stops
+    (Trigger.AvailableNow)."""
+    return (
+        stream.writeStream.foreachBatch(apply)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def enrich_stream(events: DataFrame, dim: DataFrame) -> DataFrame:
     """Stream-static dimension enrichment — the streaming twin of the batch
     star join (q_join_star_orders): each micro-batch inner-joins the static
@@ -290,12 +303,7 @@ def run_incremental_mart(
             batch_df.sparkSession, batch_df, target_path, txid=f"b{batch_id}"
         )
 
-    return (
-        events.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(events, apply, checkpoint)
 
 
 def _click_side(events: DataFrame) -> DataFrame:
@@ -1053,12 +1061,7 @@ def run_ann_maintenance(
             cells_retain=cells_retain,
         )
 
-    return (
-        vecs.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(vecs, apply, checkpoint)
 
 
 def run_dupspan_stream(
@@ -1092,12 +1095,7 @@ def run_dupspan_stream(
             os.path.join(out_dir, f"b{batch_id}")
         )
 
-    return (
-        docs.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(docs, apply, checkpoint)
 
 
 # ---------------------------------------------------------------------------
@@ -1208,12 +1206,7 @@ def run_lake_maintenance(
             retain=retain,
         )
 
-    return (
-        increments.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(increments, apply, checkpoint)
 
 
 # crash seams of the per-batch catalog body, in order
@@ -1300,12 +1293,7 @@ def run_catalog_maintenance(
             buckets=buckets,
         )
 
-    return (
-        increments.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(increments, apply, checkpoint)
 
 
 # crash seam of the per-batch catalog-increment body
@@ -1371,12 +1359,7 @@ def run_catalog_increments(
             batch_df, batch_id, catalog_root, derive_increments, marker_dir
         )
 
-    return (
-        increments.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(increments, apply, checkpoint)
 
 
 @query(

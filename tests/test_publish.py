@@ -2417,17 +2417,20 @@ def test_scoped_deletes_plan_size_constant_in_group_count(spark, root, tmp_path)
     assert nscans[0] == nscans[1], nscans
 
 
-def test_scoped_group_valve_caps_reader_plan_growth(spark, root, backend):
+def test_scoped_group_valve_caps_reader_plan_growth(
+    spark, root, backend, monkeypatch
+):
     """The scoped-group VALVE (r13, VERDICT r12 #7): repeated
     delete-then-resubscribe cycles accumulate scoped-tombstone groups —
     each costs every reader two broadcast joins — until the count
-    exceeds max_scoped_groups, at which point publish_partition_overwrite
+    exceeds SCOPED_GROUPS_MAX, at which point publish_partition_overwrite
     triggers a scoped-only mini-OPTIMIZE that rewrites exactly the
     scoped partitions and clears the groups. The matrix runs 10 cycles
     under K=3 on both commit backends: group count never exceeds K, the
     valve verifiably fires, the GLOBAL register carries untouched, and
     every cycle's read matches the simulated state."""
     K = 3
+    monkeypatch.setattr(P, "SCOPED_GROUPS_MAX", K)
     MKS = tuple(range(1, 9))  # 8 partitions: scopes survive ~7 cycles,
     # so the count would grow unbounded without the valve
     state = {}  # (k, mk) -> v
@@ -2459,7 +2462,6 @@ def test_scoped_group_valve_caps_reader_plan_growth(spark, root, backend):
             root,
             "mk",
             backend=backend,
-            max_scoped_groups=K,
         )
         m = P.current_manifest(root)
         groups = m.get("scoped_deletes") or []
@@ -2474,8 +2476,8 @@ def test_scoped_group_valve_caps_reader_plan_growth(spark, root, backend):
     assert valve_fired >= 1  # the valve demonstrably triggered
 
 
-def test_optimize_scoped_only_keeps_global_register(spark, root):
-    """optimize_table(scoped_only=True) purges ONLY the scoped groups:
+def test_optimize_scoped_only_keeps_global_register(spark, root, backend):
+    """The valve's scoped-only OPTIMIZE purges ONLY the scoped groups:
     the global register (and delete_key) carries, fragmented unaffected
     partitions stay unpacked, and the read is value-identical before
     and after."""
@@ -2489,7 +2491,7 @@ def test_optimize_scoped_only_keeps_global_register(spark, root):
     before = {
         (r["k"], r["v"]) for r in P.read_current(spark, root).collect()
     }
-    P.optimize_table(spark, root, scoped_only=True)
+    P._optimize(spark, root, backend, scoped_only=True)
     m1 = P.current_manifest(root)
     assert not m1.get("scoped_deletes")
     assert m1.get("deletes") and m1.get("delete_key") == "k"
@@ -2498,9 +2500,9 @@ def test_optimize_scoped_only_keeps_global_register(spark, root):
     }
     assert after == before == {(7, 99), (8, 30)}
     # idempotent: no scoped groups left -> no new commit
-    assert P.optimize_table(spark, root, scoped_only=True) == P._manifest_name(
-        m1["txid"]
-    )
+    assert P._optimize(
+        spark, root, backend, scoped_only=True
+    ) == P._manifest_name(m1["txid"])
 
 
 def test_optimize_bucketed_partitioned_purges_and_keeps_colocation(
@@ -3040,13 +3042,14 @@ def test_catalog_increment_reconciles_tombstones_stats_narrowed(
     assert _snap(after) == _snap(got)
 
 
-def test_catalog_scoped_group_valve(spark, cat, backend):
+def test_catalog_scoped_group_valve(spark, cat, backend, monkeypatch):
     """The catalog twin of the scoped-group valve (r13): repeated
     delete/resubscribe cycles through publish_catalog_increments keep
     the table's scoped-group count capped at K — a scoped-only purge
     commits as its own record swap, the global register carries, and
     every cycle's read matches the simulated state."""
     K = 2
+    monkeypatch.setattr(P, "SCOPED_GROUPS_MAX", K)
     MKS = tuple(range(1, 7))
     state = {}
     rows = [(k, 199600 + mk, k * 100 + mk) for k in range(8) for mk in MKS]
@@ -3085,7 +3088,6 @@ def test_catalog_scoped_group_valve(spark, cat, backend):
             cat,
             {"f": spark.createDataFrame(inc_rows, "k long, mk long, v long")},
             backend=backend,
-            max_scoped_groups=K,
         )
         m = P._load_manifest(
             os.path.join(cat, "tables", "f"),
@@ -3101,6 +3103,118 @@ def test_catalog_scoped_group_valve(spark, cat, backend):
         }
         assert got == state, f"cycle {i}"
     assert valve_fired >= 1
+
+
+def test_catalog_valve_rewrites_carry_fresh_stats(
+    spark, cat, backend, monkeypatch
+):
+    """The catalog valve's scoped purge is OPTIMIZE's scoped-only
+    rewrite: on a table carrying a stats register, every partition it
+    rewrites comes back as one file WITH fresh stats (a stats-less
+    rewrite would degrade read_catalog_where to full scans until the
+    next maintenance), the groups clear, and the read is unchanged."""
+    monkeypatch.setattr(P, "SCOPED_GROUPS_MAX", 0)
+    rows = [
+        (k, mk, k * 100 + mk % 100) for k in range(6) for mk in (199601, 199602)
+    ]
+    P.publish_tables(
+        spark, {"f": spark.createDataFrame(rows, "k long, mk long, v long")},
+        cat, backend=backend, partitions={"f": "mk"},
+    )
+    P.maintain_catalog(
+        spark, cat, stats_cols={"f": ["k"]}, compact=False, backend=backend
+    )
+    P.publish_catalog_deletes(
+        spark, cat, "f", spark.createDataFrame([(2,)], "k long"), "k",
+        backend=backend,
+    )
+    # resubscribe key 2 in 199601 only: its stale copy in the carried
+    # 199602 becomes a scoped group, and the valve (cap 0) purges it
+    inc = [(k, 199601, 5000 + k) for k in range(6)]
+    P.publish_catalog_increments(
+        spark, cat, {"f": spark.createDataFrame(inc, "k long, mk long, v long")},
+        backend=backend,
+    )
+    rec = P.catalog_record(cat)
+    m = P._load_manifest(os.path.join(cat, "tables", "f"), rec["tables"]["f"])
+    assert not m.get("scoped_deletes")
+    rewritten = m["partitions"]["199602"]
+    assert m["stats_cols"] == ["k"]
+    assert all("k" in m["stats"].get(f, {}) for f in rewritten)
+    (f,) = rewritten  # OPTIMIZE's one file per partition
+    assert f.split(os.sep)[1] == m["txid"]  # in the valve's own dir
+    assert m["stats"][f]["k"] == [0, 5]
+    want = {(k, mk, v) for k, mk, v in rows if mk == 199602 and k != 2}
+    want |= set(inc)
+    assert set(_snap(P.read_catalog_table(spark, cat, "f"))) == want
+
+
+@pytest.mark.parametrize(
+    "writer",
+    [
+        "publish_tables",
+        "catalog_deletes",
+        "catalog_increments",
+        "maintain_catalog",
+        "partition_overwrite",
+    ],
+)
+def test_derived_txid_never_reclaims_committed_data(
+    spark, root, cat, backend, monkeypatch, writer
+):
+    """A derived txid that collides with an earlier EXPLICIT one (``t3``
+    committed at seq 1, ``x1`` at seq 2: the next fenced derivation is
+    ``t3`` again) must never reclaim what the committed state still
+    uses: every writer that derives a txid refuses with
+    ConcurrentPublishError before removing anything, and the committed
+    table (and the seq-1 version) reads back identically. A CAS txid
+    carries a per-writer suffix, so there the collision is forced."""
+    if backend is not P.LOCAL:
+        monkeypatch.setattr(P, "_derive_txid", lambda prev, backend: "t3")
+    f = spark.createDataFrame(
+        [(k, mk, k * 100 + mk % 100) for k in range(6) for mk in (199601, 199602)],
+        "k long, mk long, v long",
+    ).repartition(1)
+    month1 = f.where(F.col("mk") == 199601)
+    if writer == "partition_overwrite":
+        P.publish_partition_overwrite(spark, f, root, "mk", txid="t3")
+        v1 = _snap(P.read_current(spark, root))
+        # x1 replaces 199601; 199602 still lives in data/t3
+        P.publish_partition_overwrite(spark, month1, root, "mk", txid="x1")
+        before = _snap(P.read_current(spark, root))
+        with pytest.raises(P.ConcurrentPublishError):
+            P.publish_partition_overwrite(spark, month1, root, "mk")
+        assert _snap(P.read_current(spark, root)) == before
+        assert _snap(P.read_snapshot(spark, root, seq=1)) == v1
+        return
+    P.publish_tables(
+        spark, {"f": f}, cat, txid="t3", backend=backend, partitions={"f": "mk"}
+    )
+    P.publish_tables(
+        spark, {"g": _dim(spark, 1)}, cat, txid="x1", backend=backend
+    )
+    before = _snap(P.read_catalog_table(spark, cat, "f"))
+    write = {
+        "publish_tables": lambda: P.publish_tables(
+            spark, {"f": month1}, cat, backend=backend, partitions={"f": "mk"}
+        ),
+        "catalog_deletes": lambda: P.publish_catalog_deletes(
+            spark, cat, "f", spark.createDataFrame([(1,)], "k long"), "k",
+            backend=backend,
+        ),
+        "catalog_increments": lambda: P.publish_catalog_increments(
+            spark, cat, {"f": month1}, backend=backend
+        ),
+        "maintain_catalog": lambda: P.maintain_catalog(
+            spark, cat, stats_cols={"f": ["k"]}, compact=False,
+            backend=backend,
+        ),
+    }[writer]
+    with pytest.raises(P.ConcurrentPublishError):
+        write()
+    assert P.catalog_record(cat)["txid"] == "x1"
+    assert _snap(P.read_catalog_table(spark, cat, "f")) == before
+    assert _snap(P.read_catalog_table(spark, cat, "f", seq=1)) == before
 
 
 def test_maintain_catalog_stats_only_carries_registers(spark, cat, backend):
