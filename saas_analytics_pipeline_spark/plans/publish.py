@@ -505,21 +505,26 @@ def _reclaim(
     record) ``name_of(txid)`` and the ``data/<txid>`` dir — but refuse,
     before removing anything, when ``committed`` (the manifest the
     pointer or catalog record commits for this root) IS that manifest
-    or references a file or tombstone in that dir: deleting either
-    would lose committed data. Fenced txids are monotone and CAS txids
-    carry a per-writer suffix, so only a derived txid colliding with an
-    earlier explicit one reaches the refusal."""
+    or references a file or tombstone in that dir, or when that
+    manifest is a retained ancestor (its seq is not above the committed
+    one, where a crashed attempt's would be): deleting either would
+    lose committed data or break time travel. Fenced txids are monotone
+    and CAS txids carry a per-writer suffix, so only a derived txid
+    colliding with an earlier explicit one reaches the refusal."""
     name = name_of(txid)
+    path = os.path.join(root, "manifests", name)
+    held = _load_manifest(root, name) if os.path.exists(path) else None
     if committed is not None and (
-        committed.get("txid") == txid or txid in _referenced_txids(committed)
+        committed.get("txid") == txid
+        or txid in _referenced_txids(committed)
+        or (held and "seq" in committed and held.get("seq", 0) <= committed["seq"])
     ):
         raise ConcurrentPublishError(
             f"refusing to reclaim {name} and data/{txid} under {root}: the "
-            "committed state references them (a writer committed under "
-            "this txid)"
+            "committed state or a retained ancestor references them (a "
+            "writer committed under this txid)"
         )
-    path = os.path.join(root, "manifests", name)
-    if os.path.exists(path):
+    if held is not None:
         os.remove(path)
     data_dir = os.path.join(root, "data", txid)
     if os.path.isdir(data_dir):
@@ -1577,6 +1582,7 @@ def publish_stats(
         # unique under CAS: a concurrent writer deriving the same seq
         # must not share this manifest's name (ADVICE r10)
         txid = _derive_txid(prev, backend)
+        _reclaim(root, txid, prev)
         # last-wins: a CAS retry re-annotates the WINNER's files
         return _cas_commit(
             root, backend, txid,
@@ -2324,6 +2330,7 @@ def publish_tables(
             # orphan the guarded reclaims remove before the fresh frames
             # stage anew
             txid = _derive_txid(prev, backend)
+            _reclaim(catalog_root, txid, prev, _catalog_name)
         elif _replayed(catalog_root, backend, txid, _catalog_name(txid)):
             # explicit txid: replay semantics (the streaming contract) —
             # an already-written catalog record means every table was
@@ -2358,16 +2365,16 @@ def _commit_catalog_record(
     base_tables: dict[str, str] | None = None,
     what: str = "commit",
 ) -> str:
-    """The catalog-record commit of every catalog-grain writer: reclaim
-    a crashed attempt's record at ``txid`` (guarded — never the record
-    ``rec`` the pointer commits), merge ``staged`` table manifests over
-    the previous record's map and swap once (_cas_commit). Without
+    """The catalog-record commit of every catalog-grain writer: merge
+    ``staged`` table manifests over the previous record's map and swap
+    once (_cas_commit). A writer deriving ``txid`` has already reclaimed
+    a crashed attempt's record at it (guarded), BEFORE staging any
+    table, so a refused name never touches table data. Without
     ``base_tables`` a CAS loser re-merges over the winner's record and
     retries (last-wins: publish_tables). With it (table -> manifest name
     as of the writer's read) the loser retries IFF none of its tables
     drifted under it — disjoint-table writers both commit, overlapping
     ones fail loudly."""
-    _reclaim(catalog_root, txid, rec, _catalog_name)
 
     def record(rec: dict | None) -> dict:
         tables = dict((rec or {}).get("tables") or {})
@@ -2432,6 +2439,7 @@ def publish_catalog_deletes(
         _, rec, etag = _read_head(catalog_root, backend)
         troot, man_name, prev_m = _catalog_table(catalog_root, rec, table)
         txid = _derive_txid(rec, backend)
+        _reclaim(catalog_root, txid, rec, _catalog_name)
         append = _write_tombstone(
             spark, troot, prev_m, keys_df, key_col, txid,
             f"catalog table {table!r}",
@@ -2467,6 +2475,7 @@ def publish_catalog_increments(
             if len(m.get("scoped_deletes") or []) <= SCOPED_GROUPS_MAX:
                 continue
             purge_txid = _derive_txid(rec, backend)
+            _reclaim(catalog_root, purge_txid, rec, _catalog_name)
             _, build = _optimized(spark, troot, m, purge_txid, scoped_only=True)
             _commit_catalog_record(
                 catalog_root, backend, {t: _stage_manifest(troot, build(m))},
@@ -2516,6 +2525,7 @@ def _publish_catalog_increments(
             )
         if txid is None:
             txid = _derive_txid(rec, backend)
+            _reclaim(catalog_root, txid, rec, _catalog_name)
         elif _replayed(catalog_root, backend, txid, _catalog_name(txid)):
             return _catalog_name(txid)
         staged: dict[str, str] = {}
@@ -3164,6 +3174,7 @@ def maintain_catalog(
         if rec is None:
             raise FileNotFoundError(f"no committed catalog under {catalog_root}")
         txid = _derive_txid(rec, backend)
+        _reclaim(catalog_root, txid, rec, _catalog_name)
         base_tables = dict(rec["tables"])
         staged: dict[str, str] = {}
         compacted: list[str] = []

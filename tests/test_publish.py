@@ -3217,6 +3217,61 @@ def test_derived_txid_never_reclaims_committed_data(
     assert _snap(P.read_catalog_table(spark, cat, "f", seq=1)) == before
 
 
+@pytest.mark.parametrize(
+    "writer",
+    ["partition_overwrite", "publish_stats", "publish_tables", "catalog_deletes"],
+)
+def test_derived_txid_never_reclaims_retained_ancestor(
+    spark, root, cat, backend, monkeypatch, writer
+):
+    """The same collision when the committed state no longer uses the
+    explicit ``t3`` (``x1`` replaced every partition / the whole table):
+    ``t3`` is still a retained ancestor, so a writer deriving ``t3``
+    refuses with ConcurrentPublishError instead of deleting or
+    overwriting it, and time travel to seq 1 still reads it back."""
+    if backend is not P.LOCAL:
+        monkeypatch.setattr(P, "_derive_txid", lambda prev, backend: "t3")
+    f = spark.createDataFrame(
+        [(k, mk, k * 100 + mk % 100) for k in range(6) for mk in (199601, 199602)],
+        "k long, mk long, v long",
+    ).repartition(1)
+    g = f.withColumn("v", F.col("v") + 1)
+    if writer in ("partition_overwrite", "publish_stats"):
+        P.publish_partition_overwrite(spark, f, root, "mk", txid="t3")
+        P.publish_partition_overwrite(spark, g, root, "mk", txid="x1")
+        write = {
+            "partition_overwrite": lambda: P.publish_partition_overwrite(
+                spark, g, root, "mk"
+            ),
+            "publish_stats": lambda: P.publish_stats(spark, root, ["k"]),
+        }[writer]
+        with pytest.raises(P.ConcurrentPublishError):
+            write()
+        assert _snap(P.read_current(spark, root)) == _snap(g)
+        assert _snap(P.read_snapshot(spark, root, seq=1)) == _snap(f)
+        return
+    P.publish_tables(
+        spark, {"f": f}, cat, txid="t3", backend=backend, partitions={"f": "mk"}
+    )
+    P.publish_tables(
+        spark, {"f": g}, cat, txid="x1", backend=backend, partitions={"f": "mk"}
+    )
+    write = {
+        "publish_tables": lambda: P.publish_tables(
+            spark, {"g": _dim(spark, 1)}, cat, backend=backend
+        ),
+        "catalog_deletes": lambda: P.publish_catalog_deletes(
+            spark, cat, "f", spark.createDataFrame([(1,)], "k long"), "k",
+            backend=backend,
+        ),
+    }[writer]
+    with pytest.raises(P.ConcurrentPublishError):
+        write()
+    assert P.catalog_record(cat)["txid"] == "x1"
+    assert _snap(P.read_catalog_table(spark, cat, "f")) == _snap(g)
+    assert _snap(P.read_catalog_table(spark, cat, "f", seq=1)) == _snap(f)
+
+
 def test_maintain_catalog_stats_only_carries_registers(spark, cat, backend):
     """A compact=False stats annotation over a register-carrying catalog
     table must CARRY the tombstones — dropping them would resurrect
