@@ -3149,6 +3149,39 @@ def test_catalog_valve_rewrites_carry_fresh_stats(
     assert set(_snap(P.read_catalog_table(spark, cat, "f"))) == want
 
 
+def _collided(spark, root, cat, backend, second, kind):
+    """Commit ``t3`` (seq 1) then ``x1`` (seq 2), so the next fenced
+    derivation is ``t3`` again. ``second`` is the x1 commit's scope:
+    ``"part"`` keeps data/t3 referenced (x1 replaces one partition /
+    publishes an unrelated table), ``"all"`` leaves t3 a retained
+    ancestor only (x1 replaces every partition / the whole table).
+    Returns the seq-1 and seq-2 rows of the pointer root or of
+    catalog table ``f``."""
+    f = spark.createDataFrame(
+        [(k, mk, k * 100 + mk % 100) for k in range(6) for mk in (199601, 199602)],
+        "k long, mk long, v long",
+    ).repartition(1)
+    x1 = (
+        f.where(F.col("mk") == 199601)
+        if second == "part"
+        else f.withColumn("v", F.col("v") + 1)
+    )
+    if kind == "pointer":
+        P.publish_partition_overwrite(spark, f, root, "mk", txid="t3")
+        P.publish_partition_overwrite(spark, x1, root, "mk", txid="x1")
+        return _snap(f), _snap(P.read_current(spark, root))
+    P.publish_tables(
+        spark, {"f": f}, cat, txid="t3", backend=backend, partitions={"f": "mk"}
+    )
+    frames = {"g": _dim(spark, 1)} if second == "part" else {"f": x1}
+    P.publish_tables(
+        spark, frames, cat, txid="x1", backend=backend,
+        partitions={"f": "mk"} if "f" in frames else None,
+    )
+    return _snap(f), _snap(P.read_catalog_table(spark, cat, "f"))
+
+
+@pytest.mark.parametrize("second", ["part", "all"])
 @pytest.mark.parametrize(
     "writer",
     [
@@ -3157,46 +3190,34 @@ def test_catalog_valve_rewrites_carry_fresh_stats(
         "catalog_increments",
         "maintain_catalog",
         "partition_overwrite",
+        "publish_stats",
     ],
 )
 def test_derived_txid_never_reclaims_committed_data(
-    spark, root, cat, backend, monkeypatch, writer
+    spark, root, cat, backend, monkeypatch, writer, second
 ):
-    """A derived txid that collides with an earlier EXPLICIT one (``t3``
-    committed at seq 1, ``x1`` at seq 2: the next fenced derivation is
-    ``t3`` again) must never reclaim what the committed state still
-    uses: every writer that derives a txid refuses with
-    ConcurrentPublishError before removing anything, and the committed
-    table (and the seq-1 version) reads back identically. A CAS txid
-    carries a per-writer suffix, so there the collision is forced."""
-    if backend is not P.LOCAL:
-        monkeypatch.setattr(P, "_derive_txid", lambda prev, backend: "t3")
-    f = spark.createDataFrame(
-        [(k, mk, k * 100 + mk % 100) for k in range(6) for mk in (199601, 199602)],
-        "k long, mk long, v long",
-    ).repartition(1)
-    month1 = f.where(F.col("mk") == 199601)
-    if writer == "partition_overwrite":
-        P.publish_partition_overwrite(spark, f, root, "mk", txid="t3")
-        v1 = _snap(P.read_current(spark, root))
-        # x1 replaces 199601; 199602 still lives in data/t3
-        P.publish_partition_overwrite(spark, month1, root, "mk", txid="x1")
-        before = _snap(P.read_current(spark, root))
-        with pytest.raises(P.ConcurrentPublishError):
-            P.publish_partition_overwrite(spark, month1, root, "mk")
-        assert _snap(P.read_current(spark, root)) == before
-        assert _snap(P.read_snapshot(spark, root, seq=1)) == v1
-        return
-    P.publish_tables(
-        spark, {"f": f}, cat, txid="t3", backend=backend, partitions={"f": "mk"}
+    """A derived txid forced onto an earlier EXPLICIT one (``t3``
+    committed at seq 1, ``x1`` at seq 2) must never reclaim or
+    overwrite what the committed state or a retained ancestor holds:
+    every writer that derives a txid refuses with ConcurrentPublishError
+    before removing anything, and the committed state and the seq-1
+    version read back identically. The derivation itself skips held
+    names (next test), so the collision is forced here on both
+    backends: the refusal is the backstop."""
+    monkeypatch.setattr(P, "_derive_txid", lambda *a: "t3")
+    pointer = ("partition_overwrite", "publish_stats")
+    kind = "pointer" if writer in pointer else "catalog"
+    v1, v2 = _collided(spark, root, cat, backend, second, kind)
+    month1 = spark.createDataFrame(
+        [(k, 199601, k) for k in range(6)], "k long, mk long, v long"
     )
-    P.publish_tables(
-        spark, {"g": _dim(spark, 1)}, cat, txid="x1", backend=backend
-    )
-    before = _snap(P.read_catalog_table(spark, cat, "f"))
     write = {
+        "partition_overwrite": lambda: P.publish_partition_overwrite(
+            spark, month1, root, "mk"
+        ),
+        "publish_stats": lambda: P.publish_stats(spark, root, ["k"]),
         "publish_tables": lambda: P.publish_tables(
-            spark, {"f": month1}, cat, backend=backend, partitions={"f": "mk"}
+            spark, {"h": _dim(spark, 2)}, cat, backend=backend
         ),
         "catalog_deletes": lambda: P.publish_catalog_deletes(
             spark, cat, "f", spark.createDataFrame([(1,)], "k long"), "k",
@@ -3212,64 +3233,52 @@ def test_derived_txid_never_reclaims_committed_data(
     }[writer]
     with pytest.raises(P.ConcurrentPublishError):
         write()
-    assert P.catalog_record(cat)["txid"] == "x1"
-    assert _snap(P.read_catalog_table(spark, cat, "f")) == before
-    assert _snap(P.read_catalog_table(spark, cat, "f", seq=1)) == before
-
-
-@pytest.mark.parametrize(
-    "writer",
-    ["partition_overwrite", "publish_stats", "publish_tables", "catalog_deletes"],
-)
-def test_derived_txid_never_reclaims_retained_ancestor(
-    spark, root, cat, backend, monkeypatch, writer
-):
-    """The same collision when the committed state no longer uses the
-    explicit ``t3`` (``x1`` replaced every partition / the whole table):
-    ``t3`` is still a retained ancestor, so a writer deriving ``t3``
-    refuses with ConcurrentPublishError instead of deleting or
-    overwriting it, and time travel to seq 1 still reads it back."""
-    if backend is not P.LOCAL:
-        monkeypatch.setattr(P, "_derive_txid", lambda prev, backend: "t3")
-    f = spark.createDataFrame(
-        [(k, mk, k * 100 + mk % 100) for k in range(6) for mk in (199601, 199602)],
-        "k long, mk long, v long",
-    ).repartition(1)
-    g = f.withColumn("v", F.col("v") + 1)
-    if writer in ("partition_overwrite", "publish_stats"):
-        P.publish_partition_overwrite(spark, f, root, "mk", txid="t3")
-        P.publish_partition_overwrite(spark, g, root, "mk", txid="x1")
-        write = {
-            "partition_overwrite": lambda: P.publish_partition_overwrite(
-                spark, g, root, "mk"
-            ),
-            "publish_stats": lambda: P.publish_stats(spark, root, ["k"]),
-        }[writer]
-        with pytest.raises(P.ConcurrentPublishError):
-            write()
-        assert _snap(P.read_current(spark, root)) == _snap(g)
-        assert _snap(P.read_snapshot(spark, root, seq=1)) == _snap(f)
+    if kind == "pointer":
+        assert _snap(P.read_current(spark, root)) == v2
+        assert _snap(P.read_snapshot(spark, root, seq=1)) == v1
         return
-    P.publish_tables(
-        spark, {"f": f}, cat, txid="t3", backend=backend, partitions={"f": "mk"}
-    )
-    P.publish_tables(
-        spark, {"f": g}, cat, txid="x1", backend=backend, partitions={"f": "mk"}
-    )
-    write = {
-        "publish_tables": lambda: P.publish_tables(
-            spark, {"g": _dim(spark, 1)}, cat, backend=backend
-        ),
-        "catalog_deletes": lambda: P.publish_catalog_deletes(
-            spark, cat, "f", spark.createDataFrame([(1,)], "k long"), "k",
-            backend=backend,
-        ),
-    }[writer]
-    with pytest.raises(P.ConcurrentPublishError):
-        write()
     assert P.catalog_record(cat)["txid"] == "x1"
-    assert _snap(P.read_catalog_table(spark, cat, "f")) == _snap(g)
-    assert _snap(P.read_catalog_table(spark, cat, "f", seq=1)) == _snap(f)
+    assert _snap(P.read_catalog_table(spark, cat, "f")) == v2
+    assert _snap(P.read_catalog_table(spark, cat, "f", seq=1)) == v1
+
+
+@pytest.mark.parametrize("second", ["part", "all"])
+@pytest.mark.parametrize("kind", ["pointer", "catalog"])
+def test_derived_txid_skips_held_names(
+    spark, root, cat, backend, kind, second
+):
+    """After the same collision, derived writes stay live: two in a row
+    commit (under the fence the first is named ``t3-1``, not the held
+    ``t3``), each on top of the one before, and time travel to seq 1
+    and seq 2 still reads the explicit commits back."""
+    v1, v2 = _collided(spark, root, cat, backend, second, kind)
+    month1 = spark.createDataFrame(
+        [(k, 199601, k) for k in range(6)], "k long, mk long, v long"
+    )
+    gone = spark.createDataFrame([(1,)], "k long")
+    if kind == "pointer":
+        P.publish_partition_overwrite(spark, month1, root, "mk")
+        first = P.current_manifest(root)
+        P.publish_deletes(spark, gone, root, "k")
+        head = P.current_manifest(root)
+        now, old = P.read_current(spark, root), (
+            lambda seq: P.read_snapshot(spark, root, seq=seq)
+        )
+    else:
+        P.publish_catalog_increments(spark, cat, {"f": month1}, backend=backend)
+        first = P.catalog_record(cat)
+        P.publish_catalog_deletes(spark, cat, "f", gone, "k", backend=backend)
+        head = P.catalog_record(cat)
+        now, old = P.read_catalog_table(spark, cat, "f"), (
+            lambda seq: P.read_catalog_table(spark, cat, "f", seq=seq)
+        )
+    assert (first["seq"], head["seq"]) == (3, 4)
+    if backend is P.LOCAL:
+        assert (first["txid"], head["txid"]) == ("t3-1", "t4")
+    v3 = {r for r in v2 if r[1] != 199601} | set(_snap(month1))
+    assert set(_snap(now)) == {r for r in v3 if r[0] != 1}
+    assert _snap(old(1)) == v1
+    assert _snap(old(2)) == v2
 
 
 def test_maintain_catalog_stats_only_carries_registers(spark, cat, backend):
